@@ -482,9 +482,9 @@ def main() -> None:
     # that a cross-config rerun can never clobber; `_latest` stays for the
     # tooling that reads it.
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    cpus_label = os.environ.get("SPARK_GRAFT_CPUS") or str(
-        os.cpu_count() or 0
-    )
+    cpus_label = os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    if cpus_label == "*":  # local[*]: name the core count it resolves to
+        cpus_label = str(os.cpu_count() or 0)
     detail["cpus"] = cpus_label
     for fname in (
         "BENCH_DETAIL_latest.json",

@@ -2,8 +2,9 @@
 
 - ``IndexTable``: the OpenSearch/Solr/SQL IndexerBolt contract
   (external/opensearch/.../bolt/IndexerBolt.java:81-123) against a local
-  versioned parquet table: upsert docs by doc id, apply the ``deletion``
-  stream (DeletionBolt.java:53-58 — ERROR'd docs leave the index).
+  ``VersionedTable`` (streaming/frontier_table.py): upsert docs by doc
+  id, apply the ``deletion`` stream (DeletionBolt.java:53-58 — ERROR'd
+  docs leave the index).
   On a cluster the same DataFrames go to ``df.write.format("opensearch")``
   or ``foreachBatch`` bulk writers; the projection and deletion semantics
   live here, the transport is swappable.
@@ -18,203 +19,103 @@
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.urls import sha256_doc_id_expr
-
-
-class _VersionedTable:
-    """Same atomic snapshot scheme as streaming/frontier_table.py, schema-
-    agnostic."""
-
-    def __init__(self, path: str, ddl: str):
-        self.path = path
-        self.ddl = ddl
-        os.makedirs(path, exist_ok=True)
-
-    def _pointer(self):
-        return os.path.join(self.path, "_VERSION")
-
-    def current_version(self) -> int:
-        try:
-            with open(self._pointer()) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return 0
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        v = self.current_version()
-        if v == 0:
-            return spark.createDataFrame([], self.ddl)
-        return spark.read.parquet(os.path.join(self.path, f"v{v:06d}"))
-
-    def commit(self, df: DataFrame) -> int:
-        v = self.current_version() + 1
-        df.write.mode("overwrite").parquet(os.path.join(self.path, f"v{v:06d}"))
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._pointer())
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= v - 3:
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
-        return v
+from ..streaming.frontier_table import VersionedTable
 
 
 INDEX_DDL = "doc_id string, url string, title string, text string"
 
 
-class _LogStructuredTable:
-    """Append-only segment log with newest-wins MERGE-ON-READ — the LSM
-    shape every real index backend (OpenSearch/Lucene, Delta MoR,
-    Iceberg v2 deletes) uses for exactly this workload, expressed over
-    plain parquet.
-
-    Why it exists: a snapshot table's upsert rewrites the WHOLE store
-    per batch — O(|index|) write for a delta-sized generation, the same
-    cost class the crawl loop's frontier (bucket-pruned merge_commit)
-    and resolved map (ResolvedMapStore) already shed. Bucket pruning
-    does NOT transfer to the index: batch doc_ids are hash-spread, so
-    any realistically-sized generation touches every bucket. The
-    log-structured answer is exact regardless of batch size: a commit
-    APPENDS one segment (O(|batch|) write, no read of the store at
-    all), and the read side resolves newest-wins per key across
-    segments — one window over base + a bounded number of deltas, with
-    the crawl loop's existing ``compact_every`` cadence folding the log
-    back into a single base segment (read cost is bounded by the
-    cadence, write cost by the batch; SCALING.json ``index_upsert``
-    pins the flat curve against the snapshot rewrite's linear one).
-
-    Crash contract, single writer (the loop): a segment becomes visible
-    only when the ``_SEGMENTS`` listing is atomically replaced to
-    include it; a crash mid-write leaves an unlisted directory that the
-    next commit to that sequence number overwrites, and compaction
-    removes any directory the listing no longer references.
-    """
-
-    def __init__(self, path: str, ddl: str, key_col: str):
-        self.path = path
-        self.ddl = ddl
-        self.key_col = key_col
-        os.makedirs(path, exist_ok=True)
-
-    def _listing(self) -> str:
-        return os.path.join(self.path, "_SEGMENTS")
-
-    def segments(self) -> list[str]:
-        try:
-            with open(self._listing()) as f:
-                return [ln.strip() for ln in f if ln.strip()]
-        except FileNotFoundError:
-            return []
-
-    def _flip(self, names: list[str]) -> None:
-        tmp = self._listing() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(names) + "\n")
-        os.replace(tmp, self._listing())
-
-    def _next_seq(self) -> int:
-        segs = self.segments()
-        return (int(segs[-1][3:]) + 1) if segs else 1
-
-    def append(self, rows_with_op: DataFrame) -> int:
-        """Commit one segment: ``rows_with_op`` = ddl columns + ``__op``
-        ('u' upsert / 'd' delete tombstone). O(|batch|) — never reads
-        the store."""
-        seq = self._next_seq()
-        name = f"seg{seq:06d}"
-        rows_with_op.write.mode("overwrite").parquet(
-            os.path.join(self.path, name)
-        )
-        self._flip(self.segments() + [name])
-        return seq
-
-    def read_resolved(self, spark: SparkSession) -> DataFrame:
-        """Newest-wins per key across segments, tombstones dropped. ONE
-        hash shuffle on the key (the window), sized by base + deltas —
-        the read-side price of O(batch) writes, bounded by compaction."""
-        from pyspark.sql import Window
-
-        segs = self.segments()
-        if not segs:
-            return spark.createDataFrame([], self.ddl)
-        parts = [
-            spark.read.parquet(os.path.join(self.path, name))
-            .withColumn("__seq", F.lit(i))
-            for i, name in enumerate(segs)
-        ]
-        allseg = parts[0]
-        for p in parts[1:]:
-            allseg = allseg.unionByName(p)
-        w = Window.partitionBy(self.key_col).orderBy(F.desc("__seq"))
-        return (
-            allseg.withColumn("__rn", F.row_number().over(w))
-            .where((F.col("__rn") == 1) & (F.col("__op") == "u"))
-            .drop("__rn", "__seq", "__op")
-        )
-
-    def compact(self, spark: SparkSession) -> None:
-        """Fold the log into a single base segment (the OPTIMIZE /
-        Lucene-merge step the loop's ``compact_every`` cadence runs):
-        resolve, write as the next sequence, flip the listing to just
-        it, then drop unreferenced directories."""
-        segs = self.segments()
-        if len(segs) <= 1:
-            return
-        resolved = self.read_resolved(spark).withColumn("__op", F.lit("u"))
-        # materialize before the flip: the plan reads the very segments
-        # compaction retires (same overwrite-onto-lineage rule as
-        # ResolvedMapStore), and the new segment path is fresh
-        seq = self._next_seq()
-        name = f"seg{seq:06d}"
-        resolved.write.mode("overwrite").parquet(
-            os.path.join(self.path, name)
-        )
-        self._flip([name])
-        for entry in os.listdir(self.path):
-            if entry.startswith("seg") and entry != name:
-                shutil.rmtree(
-                    os.path.join(self.path, entry), ignore_errors=True
-                )
-
-
-class IndexTable:
-    """Document index with upsert + deletion semantics.
-
-    doc id = sha256(url) (AbstractStatusUpdaterBolt.java:251-253 uses the
-    same identity for status docs).
-
-    Two storage modes, identical semantics (equivalence pinned by
+class _KeyedStore:
+    """Upsert-by-key store on one :class:`VersionedTable`, in one of two
+    layouts with identical semantics (equivalence pinned by
     tests/test_indexing.py):
 
-    - snapshot (default): upsert = anti-join old against new ids then
-      union, full rewrite per commit — fine for tests and small stores,
-      O(|index|) write per generation.
-    - ``log_structured=True``: LSM merge-on-read via
-      :class:`_LogStructuredTable` — upsert/delete APPEND one segment
-      (O(|batch|), the store is never read or rewritten), reads resolve
-      newest-wins, and :meth:`compact` (wired to the crawl loop's
-      ``compact_every`` cadence) folds the log into one base. This is
-      the 100 TB mode: per-generation index cost tracks the batch, not
-      the accumulated index.
+    - snapshot (default): upsert = anti-join old against new keys, then
+      union; every commit replaces the table — fine for tests and small
+      stores, O(|store|) write per generation.
+    - ``log_structured=True``: append-only segment log with newest-wins
+      MERGE-ON-READ — the LSM shape every real index backend
+      (OpenSearch/Lucene, Delta MoR, Iceberg v2 deletes) uses for this
+      workload. The table is partitioned by ``seg``: a commit appends
+      one ``seg=N`` partition (O(|batch|) write, no read of the store,
+      every older segment carried forward), the read side resolves
+      newest-wins per key by ``seg``, and :meth:`compact` (wired to the
+      crawl loop's ``compact_every`` cadence) folds the log back into
+      one segment. Read cost is bounded by the cadence, write cost by
+      the batch (SCALING.json ``index_upsert`` pins the flat curve
+      against the snapshot rewrite's linear one). Bucket pruning does
+      NOT transfer here: batch keys are hash-spread, so any
+      realistically-sized generation touches every bucket.
+
+    Subclasses set ``DDL`` (the store's columns) and ``KEY``.
     """
+
+    DDL: str
+    KEY: str
 
     def __init__(self, path: str, log_structured: bool = False):
         self.log_structured = log_structured
-        if log_structured:
-            self.log = _LogStructuredTable(path, INDEX_DDL, "doc_id")
-        else:
-            self.table = _VersionedTable(path, INDEX_DDL)
+        self.table = VersionedTable(
+            path, partition_by="seg" if log_structured else None
+        )
 
     def read(self, spark: SparkSession) -> DataFrame:
+        if not self.log_structured:
+            return self.table.read(spark, schema=self.DDL)
+        from pyspark.sql import Window
+
+        # ONE hash shuffle on the key (the window), sized by base +
+        # deltas — the read-side price of O(batch) writes
+        w = Window.partitionBy(self.KEY).orderBy(F.desc("seg"))
+        return (
+            self.table.read(spark, schema=self.DDL + ", __op string, seg int")
+            .withColumn("__rn", F.row_number().over(w))
+            .where((F.col("__rn") == 1) & (F.col("__op") == "u"))
+            .drop("__rn", "__op", "seg")
+        )
+
+    def _write_segment(
+        self, rows: DataFrame, op: str, alone: bool = False
+    ) -> int:
+        """Commit ``rows`` as the next segment, tagged ``__op`` = 'u'
+        (upsert) or 'd' (delete tombstone). Every older segment carries
+        forward, unless ``alone`` makes it the only one (compaction)."""
+        seg = max(map(int, self.table.partition_files()), default=0) + 1
+        tagged = rows.withColumn("__op", F.lit(op)).withColumn(
+            "seg", F.lit(seg)
+        )
+        return self.table.commit(tagged, rewrites=None if alone else [seg])
+
+    def _upsert(self, new: DataFrame) -> int:
         if self.log_structured:
-            return self.log.read_resolved(spark)
-        return self.table.read(spark)
+            return self._write_segment(new, "u")
+        old = self.read(new.sparkSession)
+        kept = old.join(new.select(self.KEY), self.KEY, "left_anti")
+        return self.table.commit(kept.unionByName(new))
+
+    def compact(self, spark: SparkSession) -> None:
+        """Fold the log into one segment (the OPTIMIZE / Lucene-merge
+        step). No-op in snapshot mode, where every commit is already one
+        base."""
+        if self.log_structured and len(self.table.partition_files()) > 1:
+            self._write_segment(self.read(spark), "u", alone=True)
+
+
+class IndexTable(_KeyedStore):
+    """Document index with upsert + deletion semantics.
+
+    doc id = sha256(url) (AbstractStatusUpdaterBolt.java:251-253 uses the
+    same identity for status docs). ``log_structured=True`` is the
+    100 TB mode: per-generation index cost tracks the batch, not the
+    accumulated index (see :class:`_KeyedStore`).
+    """
+
+    DDL = INDEX_DDL
+    KEY = "doc_id"
 
     def _new_rows(self, docs: DataFrame) -> DataFrame:
         return docs.select(
@@ -226,40 +127,30 @@ class IndexTable:
 
     def upsert(self, docs: DataFrame) -> int:
         """docs: DataFrame(url, title, text) — newest wins per URL."""
-        spark = docs.sparkSession
-        new = self._new_rows(docs)
-        if self.log_structured:
-            return self.log.append(new.withColumn("__op", F.lit("u")))
-        old = self.read(spark)
-        kept = old.join(new.select("doc_id"), "doc_id", "left_anti")
-        return self.table.commit(kept.unionByName(new))
+        return self._upsert(self._new_rows(docs))
 
     def delete(self, urls: DataFrame) -> int:
         """Apply the deletion stream (DeletionBolt): drop docs whose URL
         went terminal-ERROR."""
-        spark = urls.sparkSession
         ids = urls.select(sha256_doc_id_expr(F.col("url")).alias("doc_id"))
         if self.log_structured:
-            return self.log.append(
-                ids.withColumn("url", F.lit(None).cast("string"))
-                .withColumn("title", F.lit(None).cast("string"))
-                .withColumn("text", F.lit(None).cast("string"))
-                .withColumn("__op", F.lit("d"))
+            null = F.lit(None).cast("string")
+            return self._write_segment(
+                ids.select(
+                    "doc_id", null.alias("url"), null.alias("title"),
+                    null.alias("text"),
+                ),
+                "d",
             )
         return self.table.commit(
-            self.read(spark).join(ids, "doc_id", "left_anti")
+            self.read(urls.sparkSession).join(ids, "doc_id", "left_anti")
         )
-
-    def compact(self, spark: SparkSession) -> None:
-        """No-op in snapshot mode (every commit is already one base)."""
-        if self.log_structured:
-            self.log.compact(spark)
 
 
 CACHE_DDL = "cache_key string, url string, content binary, stored_at string"
 
 
-class ContentCache:
+class ContentCache(_KeyedStore):
     """Content-addressed page cache (S3Cacher/S3CacheChecker semantics):
     store fetched bytes once, skip refetching cached URLs.
 
@@ -271,35 +162,16 @@ class ContentCache:
     resolution is a no-op in effect — but the same segment machinery
     applies unchanged, and compaction rides the loop cadence."""
 
-    def __init__(self, path: str, log_structured: bool = False):
-        self.log_structured = log_structured
-        if log_structured:
-            self.log = _LogStructuredTable(path, CACHE_DDL, "cache_key")
-        else:
-            self.table = _VersionedTable(path, CACHE_DDL)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        if self.log_structured:
-            return self.log.read_resolved(spark)
-        return self.table.read(spark)
+    DDL = CACHE_DDL
+    KEY = "cache_key"
 
     def store(self, pages: DataFrame, stored_at: str = "2024-01-15") -> int:
-        new = pages.select(
+        return self._upsert(pages.select(
             sha256_doc_id_expr(F.col("url")).alias("cache_key"),
             "url",
             "content",
             F.lit(stored_at).alias("stored_at"),
-        ).dropDuplicates(["cache_key"])
-        if self.log_structured:
-            return self.log.append(new.withColumn("__op", F.lit("u")))
-        old = self.read(pages.sparkSession)
-        kept = old.join(new.select("cache_key"), "cache_key", "left_anti")
-        return self.table.commit(kept.unionByName(new))
-
-    def compact(self, spark: SparkSession) -> None:
-        """No-op in snapshot mode."""
-        if self.log_structured:
-            self.log.compact(spark)
+        ).dropDuplicates(["cache_key"]))
 
     def split_cached(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(hits, misses): hits carry cached content — the S3CacheChecker

@@ -982,8 +982,9 @@ def incremental_redirect_resolve(
     Output: the complete NEW resolved map, identical (tested row-for-row,
     and driver-oracle-checked as ``graph_redirect_incremental``) to
     :func:`redirect_resolve` over the first-wins-merged edge set.
-    ``cache_handle`` receives [keep, last-round handle]; keep is
-    persist()ed (caller unpersists via the CacheManager), the final
+    ``cache_handle`` receives [flagged, last-round handle]: ``flagged``
+    (``prior`` tagged with the fresh-src flag, of which ``keep`` is a
+    filter view) is the persist()ed frame (caller unpersists it), the final
     round's checkpoint blocks release through the handle's tracked
     ``unpersistRDD`` — same contract as the base operator (earlier
     rounds release in-loop)."""

@@ -72,6 +72,12 @@ def get_spark(
         n_cores = int(cpus)
     except ValueError:
         pass
+    else:
+        if n_cores <= 0:
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS={cpus!r}: need a positive core count"
+                " or '*'"
+            )
     shj_default = shj_local_map_threshold(_parse_mem_bytes(driver_mem), n_cores)
 
     builder = (

@@ -12,10 +12,14 @@ one batch plan:
     → status updates union                  — this module
     → MERGE into frontier                   — operators/status_merge.py
 
-State between generations is the frontier table (parquet dir locally;
-Delta/Iceberg on a cluster — the MERGE is expressed as a full-plan rewrite
-here and maps 1:1 onto ``MERGE INTO`` where available). Lineage + an
-idempotent merge replace Storm's ack/fail at-least-once contract.
+State between generations is the frontier table, plus the resolved
+redirect map, index and content cache when configured — each a
+``VersionedTable`` (streaming/frontier_table.py: ``v%06d`` snapshots, an
+atomically replaced ``_VERSION`` pointer and a ``_BATCH`` exactly-once
+mark) locally, Delta/Iceberg on a cluster; the MERGE is expressed as a
+plan rewrite here and maps 1:1 onto ``MERGE INTO`` where available.
+Lineage + an idempotent merge replace Storm's ack/fail at-least-once
+contract.
 
 At 100 TB: write the frontier partitioned by ``bucket`` and run
 generations per bucket-shard (frontier_topk's ``bucket`` arg) — each
@@ -25,8 +29,6 @@ crawl concurrently without overlapping politeness keys.
 
 from __future__ import annotations
 
-
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +37,7 @@ from ..operators.frontier import frontier_topk
 from ..operators.status_merge import merge_status_updates
 from ..parse.html import parse_pages, split_parse_streams
 from ..protocol.fetch import fetch
-from .frontier_table import FrontierTable
+from .frontier_table import FrontierTable, ResolvedMapStore
 
 
 class CrawlLoop:
@@ -64,7 +66,6 @@ class CrawlLoop:
         warc_dir: str | None = None,
         index=None,
         canonicalize_redirects: bool = False,
-        resolved_map_buckets: int = 32,
         near_dedup: bool = False,
         near_dedup_min_sim: float = 0.9,
         near_dedup_num_hashes: int = 8,
@@ -185,11 +186,10 @@ class CrawlLoop:
         # (the source never indexed a doc of its own), so the delete is
         # a harmless no-op for redirected urls.
         self.canonicalize_redirects = canonicalize_redirects
-        from .frontier_table import ResolvedMapStore
-
-        self._resolved_store = ResolvedMapStore(
-            frontier_path + "_redirect_resolved_v",
-            n_buckets=resolved_map_buckets,
+        self._resolved_store = (
+            ResolvedMapStore(frontier_path + "_redirect_resolved")
+            if canonicalize_redirects
+            else None
         )
         # near_dedup=True drops NEAR-duplicate pages from the index
         # stream each generation (r11 verdict item 6 — the way a
@@ -294,18 +294,6 @@ class CrawlLoop:
     # (external/sql/.../StatusUpdaterBolt.java:103-219).
     def _read_resolved_map(self) -> DataFrame:
         return self._resolved_store.read(self.spark)
-
-    def _write_resolved_map(
-        self, resolved: DataFrame, changed: DataFrame | None = None
-    ) -> None:
-        """Commit the new map via the bucket-pruned ResolvedMapStore
-        (streaming/frontier_table.py): only buckets containing
-        ``changed`` urls (the incremental resolve's delta) rewrite;
-        untouched buckets hard-link into the new snapshot, and the
-        monotonic version counter + ``_COMMIT`` marker make a
-        crash-retried generation write a FRESH snapshot instead of
-        overwriting the one its own plan still reads ``prior`` from."""
-        self._resolved_store.write(resolved, changed=changed)
 
     def _minhash_sigs_path(self) -> str:
         return self.frontier_path + "_minhash_sigs"
@@ -535,24 +523,22 @@ class CrawlLoop:
         self, updates: DataFrame, now: str, batch_id: str | None = None
     ) -> DataFrame:
         """Merge one batch of status updates into the frontier and commit;
-        returns the merged table. Incremental (partition-pruned) when
+        returns the committed table. Incremental (partition-pruned) when
         bucket-partitioned and a snapshot already exists. A batch_id makes
-        a crash-retried merge a no-op instead of a double-apply —
-        FrontierTable's exactly-once contract. Seed injection passes None
-        (it may run several times per generation, and DISCOVERED-merge is
-        idempotent by its own semantics)."""
+        a crash-retried merge a no-op instead of a double-apply — the
+        table's exactly-once contract, on both paths. Seed injection
+        passes None (it may run several times per generation, and
+        DISCOVERED-merge is idempotent by its own semantics)."""
         if self.bucket_partitioned and self.table.exists():
             self.table.merge_commit(
                 self.spark, updates, now, batch_id=batch_id
             )
-            return self.read_frontier()
-        # non-bucketed path carries the SAME exactly-once contract (r7
-        # review fix: the batch_id used to be accepted and dropped here)
-        if batch_id is not None and self.table.last_batch_id() == batch_id:
-            return self.read_frontier()
-        merged = merge_status_updates(self.read_frontier(), updates, now)
-        self.table.commit(merged, batch_id=batch_id)
-        return merged
+        else:
+            self.table.commit(
+                merge_status_updates(self.read_frontier(), updates, now),
+                batch_id=batch_id,
+            )
+        return self.read_frontier()
 
     # -- one generation ----------------------------------------------------
     def run_generation(self) -> dict:
@@ -975,7 +961,10 @@ class CrawlLoop:
                         cache_handle=resolve_cache,
                         delta_handle=delta_h,
                     )
-                    self._write_resolved_map(
+                    # only buckets holding the delta's urls rewrite; a
+                    # crash-retried generation writes the NEXT snapshot,
+                    # never the one its plan reads ``prior`` from
+                    self._resolved_store.write(
                         new_map, changed=delta_h[0].select("url")
                     )
                     for cached in resolve_cache:
@@ -1060,9 +1049,7 @@ class CrawlLoop:
             # (per-generation commits are O(batch) appends; this bounds
             # the read-side merge width)
             for side in (self.index, self.content_cache):
-                if side is not None and getattr(
-                    side, "log_structured", False
-                ):
+                if side is not None:
                     side.compact(self.spark)
         if self.metrics_path:
             # per-generation metrics table (StatusMetricsBolt cadence)

@@ -1,12 +1,15 @@
-"""Versioned frontier table: atomic snapshot commits over parquet.
+"""Versioned parquet tables: atomic snapshot commits, one protocol.
 
-The frontier is read and rewritten every generation (and concurrently read
-by monitors), so overwrite-in-place races readers. This is the minimal
-table format that fixes it: each commit writes a new ``v<NNN>`` snapshot
-directory, then atomically replaces the ``_VERSION`` pointer file; readers
-resolve the pointer first. On a real cluster this maps 1:1 onto Delta/
-Iceberg (``MERGE INTO`` + snapshot isolation); the operator code is
-identical either way — only this storage shim changes.
+Every table the crawl keeps between generations — the frontier, the
+resolved redirect map, the index and the content cache — is a
+:class:`VersionedTable`. The frontier is read and rewritten every
+generation (and concurrently read by monitors), so overwrite-in-place
+races readers. This is the minimal table format that fixes it: each
+commit writes a new ``v<NNNNNN>`` snapshot directory, then atomically
+replaces the ``_VERSION`` pointer file; readers resolve the pointer
+first. On a real cluster this maps 1:1 onto Delta/Iceberg (``MERGE
+INTO`` + snapshot isolation); the operator code is identical either way
+— only this storage shim changes.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 FRONTIER_DDL = (
     "url string, status string, next_fetch_date timestamp, "
@@ -22,22 +26,52 @@ FRONTIER_DDL = (
 )
 
 
-class FrontierTable:
-    """``partition_by="bucket"`` stores each snapshot hive-partitioned by
-    the politeness-bucket column (Phase-4 layout, SURVEY.md §7): a
-    generation that crawls one shard (``frontier_topk(..., bucket=b)``)
-    then scans ONLY that bucket's files — the filter becomes a
-    PartitionFilter, not a row filter. At 100 TB this is the difference
-    between reading 1/N of the table and reading all of it."""
+class VersionedTable:
+    """Snapshot-versioned parquet table with one commit step.
 
-    def __init__(self, path: str, partition_by: str | None = None):
+    Layout: ``v%06d`` snapshot directories (hive-partitioned by
+    ``partition_by`` when set), the ``_VERSION`` pointer naming the
+    current one, and an optional ``_BATCH`` file in a snapshot holding
+    the table's exactly-once mark. The last ``keep`` snapshots are
+    retained for readers and time travel.
+
+    :meth:`commit` covers three modes, chosen by ``rewrites``:
+
+    - replace (``rewrites=None``): ``df`` is the whole next snapshot;
+    - carry-forward (``rewrites`` = partition values): ``df`` holds the
+      rows of those partitions only, and every other partition of the
+      current snapshot is hard-linked into the new one — byte-identical
+      file reuse, how a real table format carries unmodified files
+      forward in its log;
+    - append: carry-forward with one fresh partition value.
+
+    Crash contract, single writer: a commit is visible only once the
+    pointer flips. A crash before the flip leaves a partial snapshot
+    directory that no reader resolves and the retry replaces. A retry
+    after the flip (the caller never saw the ack) with the same
+    ``batch_id`` is a no-op, because the current snapshot already
+    carries that mark (Delta's ``txnAppId``/``txnVersion`` idiom). The
+    mark is a single slot: right for one writer per table; a
+    multi-writer table needs a per-writer map, which is where a real
+    lakehouse's transaction log comes in.
+    """
+
+    def __init__(
+        self, path: str, partition_by: str | None = None, keep: int = 3
+    ):
         self.path = path
         self.partition_by = partition_by
+        self.keep = keep
         os.makedirs(path, exist_ok=True)
 
     @property
     def _pointer(self) -> str:
         return os.path.join(self.path, "_VERSION")
+
+    def snapshot(self, version: int | None = None) -> str:
+        """Directory of ``version`` (default: the current one)."""
+        v = self.current_version() if version is None else version
+        return os.path.join(self.path, f"v{v:06d}")
 
     def current_version(self) -> int:
         try:
@@ -49,76 +83,163 @@ class FrontierTable:
     def exists(self) -> bool:
         return self.current_version() > 0
 
-    def read(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame:
-        """Read the current snapshot, or a specific retained ``version``
-        (time travel — the Delta `VERSION AS OF` shape): snapshots are
-        immutable once the pointer moves past them, so a historical read
-        is just a scan of that version's directory. Only the last 3
-        versions are retained (``_vacuum``); older versions raise, same
-        as Delta after VACUUM."""
-        v = self.current_version() if version is None else version
-        if v == 0:
-            return spark.createDataFrame([], FRONTIER_DDL)
-        snap = os.path.join(self.path, f"v{v:06d}")
-        if version is not None and not os.path.isdir(snap):
-            raise ValueError(
-                f"version {version} not retained (current "
-                f"{self.current_version()}, keep=3 — vacuumed)"
-            )
-        return spark.read.parquet(snap)
-
     def versions(self) -> list[int]:
-        """Retained snapshot versions, ascending (the time-travel menu)."""
-        out = []
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name[1:].isdigit():
-                out.append(int(name[1:]))
-        return sorted(out)
-
-    def commit(self, df: DataFrame, batch_id: str | None = None) -> int:
-        """Materialize ``df`` as the next snapshot and flip the pointer
-        atomically. The df may read from the current snapshot (the write
-        targets a different directory, so no self-overwrite). A
-        ``batch_id`` is recorded in the snapshot (readable via
-        ``last_batch_id``) so callers replaying a batch — a streaming
-        foreachBatch epoch, a crashed generation — can detect the commit
-        already landed. An UNTAGGED commit carries the previous mark
-        forward (r7 review fix): without that, an intervening plain
-        commit (e.g. seed injection between a crash and its replay)
-        would erase the guard and let the replay double-apply. Scope:
-        the mark is a single slot — correct for this table's one-writer
-        contract (one crawl loop OR one streaming query per table); a
-        multi-writer table needs a per-writer map, which is where a real
-        lakehouse's txnAppId log comes in."""
-        v = self.current_version() + 1
-        snap = os.path.join(self.path, f"v{v:06d}")
-        effective = batch_id if batch_id is not None else self.last_batch_id()
-        writer = df.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(self.partition_by)
-        writer.parquet(snap)
-        if effective is not None:
-            with open(os.path.join(snap, "_BATCH"), "w") as f:
-                f.write(effective)
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._pointer)
-        self._vacuum(keep=3)
-        return v
+        """Retained snapshot versions, ascending (the time-travel menu).
+        A directory past the pointer is a crashed commit's, not a
+        version."""
+        current = self.current_version()
+        return sorted(
+            int(name[1:])
+            for name in os.listdir(self.path)
+            if name.startswith("v") and name[1:].isdigit()
+            and int(name[1:]) <= current
+        )
 
     def last_batch_id(self) -> str | None:
         """Batch id recorded by the current snapshot's commit (None for
-        plain commits or an empty table)."""
-        v = self.current_version()
-        marker = os.path.join(self.path, f"v{v:06d}", "_BATCH")
+        an empty table or one never committed with a batch id)."""
         try:
-            with open(marker) as f:
+            with open(os.path.join(self.snapshot(), "_BATCH")) as f:
                 return f.read().strip()
         except FileNotFoundError:
             return None
+
+    def partition_files(self) -> dict[str, int]:
+        """Parquet file count per partition value of the current
+        snapshot — driver-side metadata, never a data read."""
+        snap = self.snapshot()
+        if not self.partition_by or not os.path.isdir(snap):
+            return {}
+        prefix = self.partition_by + "="
+        return {
+            name[len(prefix):]: sum(
+                f.endswith(".parquet")
+                for f in os.listdir(os.path.join(snap, name))
+            )
+            for name in os.listdir(snap)
+            if name.startswith(prefix)
+        }
+
+    def read(
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        schema: str | None = None,
+    ) -> DataFrame:
+        """Read the current snapshot, or a retained ``version`` (time
+        travel — the Delta ``VERSION AS OF`` shape: snapshots are
+        immutable once the pointer moves past them). Vacuumed versions
+        raise, same as Delta after VACUUM. ``schema`` (DDL, partition
+        column included) is the table's schema: required for an empty
+        table, and it also reads a partitioned snapshot whose write left
+        no parquet file (an empty frame); without it the schema is read
+        from the files."""
+        v = self.current_version() if version is None else version
+        if v == 0:
+            return spark.createDataFrame([], schema)
+        snap = self.snapshot(v)
+        if version is not None and not os.path.isdir(snap):
+            raise ValueError(
+                f"version {version} not retained (current "
+                f"{self.current_version()}, keep={self.keep} — vacuumed)"
+            )
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(snap)
+
+    def commit(
+        self,
+        df: DataFrame,
+        rewrites: list[int] | None = None,
+        batch_id: str | None = None,
+    ) -> int:
+        """The table's one commit step; returns the current version
+        after it. ``df`` may read from the current snapshot: the write
+        targets the next one, so it never overwrites its own input.
+
+        1. A ``batch_id`` equal to the current mark is a replay: return
+           without writing.
+        2. Write ``df`` into the next snapshot (skipped when ``rewrites``
+           is empty).
+        3. Hard-link every partition of the current snapshot that
+           ``rewrites`` does not name (``None`` replaces everything).
+        4. Write the mark: ``batch_id``, or the previous mark carried
+           forward — an untagged commit (e.g. seed injection between a
+           crash and its replay) must not erase the guard.
+        5. Flip the pointer, then vacuum all but the last ``keep``.
+        """
+        mark = self.last_batch_id()
+        v = self.current_version()
+        if batch_id is not None and batch_id == mark:
+            return v
+        old, new = self.snapshot(v), self.snapshot(v + 1)
+        # leftovers of a crashed attempt are in no reader's lineage
+        shutil.rmtree(new, ignore_errors=True)
+        if rewrites is None or len(rewrites):
+            writer = df.write.mode("overwrite")
+            if self.partition_by:
+                writer = writer.partitionBy(self.partition_by)
+            writer.parquet(new)
+        os.makedirs(new, exist_ok=True)
+        if rewrites is not None and os.path.isdir(old):
+            prefix = self.partition_by + "="
+            skip = {f"{prefix}{r}" for r in rewrites}
+            for name in os.listdir(old):
+                if not name.startswith(prefix) or name in skip:
+                    continue
+                os.makedirs(os.path.join(new, name), exist_ok=True)
+                for fname in os.listdir(os.path.join(old, name)):
+                    if fname.endswith(".parquet"):
+                        # the new snapshot references the same bytes;
+                        # vacuuming the old one cannot orphan them
+                        os.link(
+                            os.path.join(old, name, fname),
+                            os.path.join(new, name, fname),
+                        )
+        mark = batch_id if batch_id is not None else mark
+        if mark is not None:
+            with open(os.path.join(new, "_BATCH"), "w") as f:
+                f.write(mark)
+        tmp = self._pointer + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(str(v + 1))
+        os.replace(tmp, self._pointer)
+        for old_v in self.versions():
+            if old_v <= v + 1 - self.keep:
+                shutil.rmtree(self.snapshot(old_v), ignore_errors=True)
+        return v + 1
+
+
+def _distinct_ints(df: DataFrame) -> list[int]:
+    """Sorted distinct values of a one-column int frame — a
+    metadata-sized collect (at most the bucket count after the
+    distinct)."""
+    return sorted(r[0] for r in df.distinct().collect())
+
+
+class FrontierTable(VersionedTable):
+    """The crawl frontier on a :class:`VersionedTable`.
+
+    ``partition_by="bucket"`` stores each snapshot hive-partitioned by
+    the politeness-bucket column (Phase-4 layout, SURVEY.md §7): a
+    generation that crawls one shard (``frontier_topk(..., bucket=b)``)
+    then scans ONLY that bucket's files — the filter becomes a
+    PartitionFilter, not a row filter. At 100 TB this is the difference
+    between reading 1/N of the table and reading all of it.
+
+    ``commit`` (inherited) replaces the table; ``merge_commit`` and
+    ``compact`` only choose which buckets to rewrite. Both go through
+    ``VersionedTable.commit`` directly, never through ``self.commit``,
+    so a wrapper around one public method sees exactly its own
+    commits."""
+
+    def read(
+        self, spark: SparkSession, version: int | None = None
+    ) -> DataFrame:
+        """The current snapshot or a retained ``version`` (keep=3); an
+        empty table reads as an empty ``FRONTIER_DDL`` frame."""
+        if version is None and not self.exists():
+            return spark.createDataFrame([], FRONTIER_DDL)
+        return super().read(spark, version)
 
     def merge_commit(
         self,
@@ -130,9 +251,7 @@ class FrontierTable:
     ) -> int:
         """Delta-``MERGE INTO``-shaped incremental commit: rewrite ONLY the
         bucket partitions the update batch touches; every untouched
-        bucket's parquet files are carried into the new snapshot as hard
-        links — byte-identical file reuse, exactly how a real table format
-        carries unmodified files forward in its transaction log.
+        bucket's files carry into the new snapshot as hard links.
 
         Plan shape (the 100 TB story, now demonstrated rather than
         asserted):
@@ -149,82 +268,24 @@ class FrontierTable:
         Requires ``partition_by="bucket"`` and byHost politeness keys (the
         bucket must be derivable from the URL on both sides).
 
-        Crash-restart contract (the exactly-once claim of SURVEY §3.1,
-        reference ``AbstractStatusUpdaterBolt.java:150-161``; Delta's
-        ``txnAppId``/``txnVersion`` idiom): a commit is visible only once
-        the pointer flips, and the flip records ``batch_id`` in the new
-        snapshot. A crash BEFORE the flip leaves a partial staging dir
-        that the retry's ``mode("overwrite")`` replaces; a retry AFTER
-        the flip (caller never saw the ack) is a no-op because the
-        current snapshot already carries this batch_id. Either way the
-        table equals the single-run result — pinned by
+        Exactly-once (SURVEY §3.1, reference
+        ``AbstractStatusUpdaterBolt.java:150-161``) is the table's crash
+        contract: a retry before the pointer flip replaces the partial
+        snapshot, a retry after it with the same ``batch_id`` is a no-op
+        — pinned by
         tests/test_streaming.py::test_merge_commit_crash_restart_idempotent.
         """
-        from pyspark.sql import functions as F
-
         from ..functions.urls import bucket_expr, host_key_expr
         from ..operators.status_merge import merge_status_updates
 
         if self.partition_by != "bucket":
             raise ValueError("merge_commit requires partition_by='bucket'")
-
-        if batch_id is not None and self.last_batch_id() == batch_id:
-            return self.current_version()
-
-        v = self.current_version()
-        # metadata-sized collect: ≤ num_buckets ints after distinct
-        touched = sorted(
-            r.b
-            for r in updates.select(
-                bucket_expr(host_key_expr(F.col("url"))).alias("b")
-            )
-            .distinct()
-            .collect()
+        touched = _distinct_ints(
+            updates.select(bucket_expr(host_key_expr(F.col("url"))))
         )
-        frontier = self.read(spark)
-        pruned = frontier.where(F.col("bucket").isin(touched))
+        pruned = self.read(spark).where(F.col("bucket").isin(touched))
         merged = merge_status_updates(pruned, updates, now, **merge_kwargs)
-
-        new_v = v + 1
-        snap_new = os.path.join(self.path, f"v{new_v:06d}")
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(snap_new)
-
-        snap_old = os.path.join(self.path, f"v{v:06d}")
-        touched_set = set(touched)
-        if os.path.isdir(snap_old):
-            for name in os.listdir(snap_old):
-                if not name.startswith("bucket="):
-                    continue
-                try:
-                    b = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if b in touched_set:
-                    continue
-                src = os.path.join(snap_old, name)
-                dst = os.path.join(snap_new, name)
-                os.makedirs(dst, exist_ok=True)
-                for fname in os.listdir(src):
-                    if fname.endswith(".parquet"):
-                        # hard link: the new snapshot references the same
-                        # bytes; vacuuming the old dir can't orphan them
-                        os.link(
-                            os.path.join(src, fname),
-                            os.path.join(dst, fname),
-                        )
-
-        # tagged merges write the new mark; untagged ones carry the
-        # previous mark forward (same single-slot contract as commit())
-        effective = batch_id if batch_id is not None else self.last_batch_id()
-        if effective is not None:
-            with open(os.path.join(snap_new, "_BATCH"), "w") as f:
-                f.write(effective)
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(new_v))
-        os.replace(tmp, self._pointer)
-        self._vacuum(keep=3)
-        return new_v
+        return super().commit(merged, rewrites=touched, batch_id=batch_id)
 
     def compact(
         self,
@@ -247,11 +308,10 @@ class FrontierTable:
         ``max_files_per_bucket`` — ``repartition(n, "bucket")`` puts each
         fragmented bucket's rows in exactly ONE task, so each compacts to
         exactly one file — and hard-links every already-compact bucket
-        into the new snapshot unchanged (the same byte-identical
-        carry-forward as ``merge_commit``). Content is untouched by
+        into the new snapshot unchanged. Content is untouched by
         construction; the batch-id mark carries forward so the
         exactly-once retry guard survives compaction. The fragmentation
-        inventory is a driver-side ``listdir`` — metadata bounded by the
+        inventory is ``partition_files`` — metadata bounded by the
         bucket count, never a data read. Returns the new version (or the
         current one when nothing is fragmented — no empty commits).
 
@@ -286,8 +346,6 @@ class FrontierTable:
         advantage (1.7x bbox, SCALING.json `hilbert_rewrite`) pays off
         when scans hit BOTH axes comparably — pick it for workloads
         that range over host hash as much as due time."""
-        from pyspark.sql import functions as F
-
         if self.partition_by != "bucket":
             raise ValueError("compact requires partition_by='bucket'")
         # validate curve UNCONDITIONALLY (r10 ADVICE: a typo'd curve, or
@@ -308,32 +366,19 @@ class FrontierTable:
             if zorder
             else max_files_per_bucket
         )
-        v = self.current_version()
-        snap_old = os.path.join(self.path, f"v{v:06d}")
-        frag: list[int] = []
-        compactible: list[str] = []
-        for name in sorted(os.listdir(snap_old)):
-            if not name.startswith("bucket="):
-                continue
-            n_files = sum(
-                1 for f in os.listdir(os.path.join(snap_old, name))
-                if f.endswith(".parquet")
-            )
-            if n_files > threshold:
-                frag.append(int(name.split("=", 1)[1]))
-            else:
-                compactible.append(name)
+        frag = sorted(
+            int(b) for b, n in self.partition_files().items()
+            if n > threshold
+        )
         if not frag:
-            return v
-        frontier = self.read(spark)
+            return self.current_version()
+        frontier = self.read(spark).where(F.col("bucket").isin(frag))
         if zorder:
             from ..operators.layout import zorder_key
 
-            aug = (
-                frontier.where(F.col("bucket").isin(frag))
-                .withColumn("__z_nfd", F.col("next_fetch_date").cast("double"))
-                .withColumn("__z_kh", F.xxhash64("key").cast("double"))
-            )
+            aug = frontier.withColumn(
+                "__z_nfd", F.col("next_fetch_date").cast("double")
+            ).withColumn("__z_kh", F.xxhash64("key").cast("double"))
             # clamp the date axis at its 95th percentile before min-max
             # scaling: the frontier's far-future "never" sentinel would
             # otherwise stretch the grid until the whole live band fits
@@ -374,111 +419,49 @@ class FrontierTable:
                 .drop("__z_nfd", "__z_kh", "zkey")
             )
         else:
-            to_rewrite = frontier.where(
-                F.col("bucket").isin(frag)
-            ).repartition(len(frag), "bucket")
-        new_v = v + 1
-        snap_new = os.path.join(self.path, f"v{new_v:06d}")
-        to_rewrite.write.mode("overwrite").partitionBy("bucket").parquet(
-            snap_new
-        )
-        for name in compactible:
-            src = os.path.join(snap_old, name)
-            dst = os.path.join(snap_new, name)
-            os.makedirs(dst, exist_ok=True)
-            for fname in os.listdir(src):
-                if fname.endswith(".parquet"):
-                    os.link(
-                        os.path.join(src, fname), os.path.join(dst, fname)
-                    )
-        mark = self.last_batch_id()
-        if mark is not None:
-            with open(os.path.join(snap_new, "_BATCH"), "w") as f:
-                f.write(mark)
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(new_v))
-        os.replace(tmp, self._pointer)
-        self._vacuum(keep=3)
-        return new_v
-
-    def _vacuum(self, keep: int = 3) -> None:
-        """Drop snapshots older than the last ``keep`` (readers of very old
-        versions are long gone by then)."""
-        current = self.current_version()
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name[1:].isdigit():
-                if int(name[1:]) <= current - keep:
-                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+            to_rewrite = frontier.repartition(len(frag), "bucket")
+        return super().commit(to_rewrite, rewrites=frag)
 
 
-class ResolvedMapStore:
-    """Bucket-pruned versioned snapshots for the crawl loop's resolved
-    redirect map — the frontier's ``merge_commit`` layout applied to the
-    second per-generation table the loop maintains (r12 verdict item 2:
-    ``_write_resolved_map`` rewrote the COMPLETE map every generation,
-    O(|map|) write for a handful of changed rows).
+RESOLVED_MAP_BUCKETS = 32
 
-    Layout: each snapshot is a ``<prefix><version>`` directory,
-    hive-partitioned by ``bucket = pmod(xxhash64(url), n_buckets)`` and
-    stamped with a ``_COMMIT`` marker as its last write. Readers accept
-    only COMMITTED snapshots (max version), so a crash mid-write leaves
-    an ignorable partial directory the next attempt replaces, and the
-    version counter is MONOTONIC rather than generation-derived — a
-    crash-retried generation writes a fresh version instead of
-    overwriting the very snapshot its own plan is still reading the
-    prior map from (the r12 ADVICE item: ``mode("overwrite")`` first
-    DELETES the target, so overwrite-onto-lineage either throws or
-    destroys the only complete snapshot).
+
+class ResolvedMapStore(VersionedTable):
+    """The crawl loop's resolved redirect map: a bucket-partitioned
+    :class:`VersionedTable` keeping only its current snapshot (r12
+    verdict item 2: the loop used to rewrite the COMPLETE map every
+    generation, O(|map|) write for a handful of changed rows).
+    ``bucket = pmod(xxhash64(url), RESOLVED_MAP_BUCKETS)``.
 
     Delta-bounded commit: ``write(new_map, changed=<urls>)`` rewrites
-    ONLY the buckets containing changed rows; every untouched bucket's
-    parquet files are carried into the new snapshot as hard links —
-    byte-identical reuse, exactly merge_commit's trick. Sound because
-    the map is append/update-only per generation (first-wins keeps, plus
-    the delta-sized fresh/invalid rows): a row outside a touched bucket
-    is bit-identical in old and new map by construction
-    (operators/linkrank.py incremental_redirect_resolve — ``keep`` rows
-    are emitted unchanged). A retried generation whose delta was already
-    folded produces an all-linked snapshot (zero data written) — the
-    idempotence test pins that.
+    ONLY the buckets containing changed rows; every other bucket carries
+    forward. Sound because the map is append/update-only per generation
+    (first-wins keeps, plus the delta-sized fresh/invalid rows): a row
+    outside a touched bucket is bit-identical in old and new map by
+    construction (operators/linkrank.py incremental_redirect_resolve —
+    ``keep`` rows are emitted unchanged). A retried generation whose
+    delta was already folded produces an all-linked snapshot (zero data
+    written) — the idempotence test pins that. The next snapshot never
+    overwrites the one the new map's plan reads the prior map from.
     """
 
     SCHEMA = "url string, target string, hops bigint, resolved int"
 
-    def __init__(self, prefix: str, n_buckets: int = 32):
-        self.prefix = prefix
-        self.n_buckets = n_buckets
+    def __init__(self, path: str):
+        super().__init__(path, partition_by="bucket", keep=1)
 
-    def _bucket_expr(self):
-        from pyspark.sql import functions as F
+    @staticmethod
+    def _bucket_expr():
+        return F.pmod(
+            F.xxhash64(F.col("url")), F.lit(RESOLVED_MAP_BUCKETS)
+        ).cast("int")
 
-        return F.pmod(F.xxhash64(F.col("url")), F.lit(self.n_buckets)).cast(
-            "int"
-        )
-
-    def versions(self) -> list[tuple[int, str]]:
-        """COMMITTED snapshots only, ascending. A directory without the
-        ``_COMMIT`` marker is a crashed partial write — invisible to
-        readers, reclaimed by the next write to that version slot."""
-        import glob
-
-        out = []
-        for p in glob.glob(self.prefix + "*"):
-            suf = p[len(self.prefix):]
-            if suf.isdigit() and os.path.exists(
-                os.path.join(p, "_COMMIT")
-            ):
-                out.append((int(suf), p))
-        return sorted(out)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        versions = self.versions()
-        if not versions:
-            return spark.createDataFrame([], self.SCHEMA)
-        return spark.read.parquet(versions[-1][1]).select(
-            "url", "target", "hops", "resolved"
-        )
+    def read(
+        self, spark: SparkSession, version: int | None = None
+    ) -> DataFrame:
+        return super().read(
+            spark, version, schema=self.SCHEMA + ", bucket int"
+        ).select("url", "target", "hops", "resolved")
 
     def write(
         self, resolved: DataFrame, changed: DataFrame | None = None
@@ -488,57 +471,10 @@ class ResolvedMapStore:
         the incremental resolve's delta) and an existing snapshot, only
         touched buckets are computed-and-written; the rest hard-link.
         Returns the committed version."""
-        from pyspark.sql import functions as F
-
-        versions = self.versions()
-        new_v = (versions[-1][0] + 1) if versions else 1
-        new_path = f"{self.prefix}{new_v}"
-        if os.path.exists(new_path):
-            # uncommitted leftover of a crashed attempt; never in any
-            # reader's (or this plan's) lineage — only committed
-            # versions are ever read
-            shutil.rmtree(new_path, ignore_errors=True)
         data = resolved.withColumn("bucket", self._bucket_expr())
-        if changed is not None and versions:
-            old_path = versions[-1][1]
-            # metadata-sized collect: ≤ n_buckets ints after distinct
-            touched = sorted(
-                r.b
-                for r in changed.select(
-                    self._bucket_expr().alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            data.where(F.col("bucket").isin(touched)).write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(new_path)
-            touched_set = set(touched)
-            for name in os.listdir(old_path):
-                if not name.startswith("bucket="):
-                    continue
-                try:
-                    b = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if b in touched_set:
-                    continue
-                src = os.path.join(old_path, name)
-                dst = os.path.join(new_path, name)
-                os.makedirs(dst, exist_ok=True)
-                for fname in os.listdir(src):
-                    if fname.endswith(".parquet"):
-                        os.link(
-                            os.path.join(src, fname),
-                            os.path.join(dst, fname),
-                        )
-        else:
-            data.write.mode("overwrite").partitionBy("bucket").parquet(
-                new_path
-            )
-        with open(os.path.join(new_path, "_COMMIT"), "w") as f:
-            f.write(str(new_v))
-        for _, p in versions:
-            if p != new_path:
-                shutil.rmtree(p, ignore_errors=True)
-        return new_v
+        if changed is None or not self.exists():
+            return self.commit(data)
+        touched = _distinct_ints(changed.select(self._bucket_expr()))
+        return self.commit(
+            data.where(F.col("bucket").isin(touched)), rewrites=touched
+        )

@@ -179,19 +179,17 @@ def make_streaming_merger(table, now_fn=None):
     foreachBatch is at-least-once on failure (a crash between the commit
     and the checkpoint write REPLAYS the epoch), and FETCH_ERROR
     escalation is not naturally idempotent — so the epoch id is recorded
-    in the snapshot and a replayed epoch is a no-op (the streaming use of
-    FrontierTable's batch_id contract; Delta's foreachBatch
-    txnAppId/txnVersion idiom)."""
+    in the snapshot and the commit of a replayed epoch is a no-op (the
+    streaming use of the table's batch_id contract; Delta's foreachBatch
+    txnAppId/txnVersion idiom). The merge plan is lazy: a replay never
+    runs it."""
     from ..operators.status_merge import merge_status_updates
 
     def merge_batch(batch_df, batch_id: int):
-        bid = f"epoch-{batch_id}"
-        if table.last_batch_id() == bid:
-            return  # replayed epoch: already committed, ack was lost
         spark = batch_df.sparkSession
         now = (now_fn or (lambda b: f"2024-01-15 {b % 24:02d}:00:00"))(batch_id)
         merged = merge_status_updates(table.read(spark), batch_df, now)
-        table.commit(merged, batch_id=bid)
+        table.commit(merged, batch_id=f"epoch-{batch_id}")
 
     return merge_batch
 

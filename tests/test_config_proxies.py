@@ -100,3 +100,20 @@ def test_build_crawl_loop_round8_knobs(spark, tmp_path):
     assert set(frontier) == set(site)
     assert all(st == "FETCHED" for st in frontier.values())
     assert glob.glob(str(tmp_path / "warc" / "*.warc.gz"))
+
+
+@pytest.mark.parametrize("cpus", ["0", "-2"])
+def test_nonpositive_spark_graft_cpus_fails_at_startup(monkeypatch, cpus):
+    """A core count of 0 or below is rejected before any session is
+    built, with the variable named, instead of failing mid-run."""
+    from pyspark.sql import SparkSession
+
+    from incubator_stormcrawler_spark.session import get_spark
+
+    def no_builder(*a, **kw):
+        raise AssertionError("session builder reached")
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    monkeypatch.setattr(SparkSession.Builder, "appName", no_builder)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        get_spark("bad-cpus")

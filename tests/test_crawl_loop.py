@@ -595,7 +595,7 @@ def test_crawl_with_log_structured_index_matches_snapshot(
         "https://h0.example/p0": "zero", "https://h1.example/p1": "one",
     }
     # the cadence kept the log bounded (compacted at gens 2/4/6)
-    assert len(log_idx.log.segments()) <= 3
+    assert len(log_idx.table.partition_files()) <= 3
 
 
 def test_canonicalize_redirects_keys_index_by_terminal_url(spark, tmp_path):
@@ -910,7 +910,8 @@ def test_resolved_map_steady_state_writes_zero_bytes(spark, tmp_path):
     )
 
     def snapshot_inodes():
-        v, p = loop._resolved_store.versions()[-1]
+        store = loop._resolved_store
+        v, p = store.current_version(), store.snapshot()
         inodes = set()
         for name in os.listdir(p):
             if name.startswith("bucket="):

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from incubator_stormcrawler_spark.operators.indexing import ContentCache, IndexTable
 
@@ -281,18 +284,15 @@ def test_log_structured_index_equivalent_to_snapshot(spark, tmp_path):
     want = _drive(snap, spark)
     got = _drive(log, spark)
     assert got == want
-    assert len(log.log.segments()) == 4
-    # compaction folds to one base, content unchanged, old dirs gone
+    assert len(log.table.partition_files()) == 4
+    # compaction folds to one base, content unchanged, old snapshots
+    # vacuumed
     log.compact(spark)
-    assert len(log.log.segments()) == 1
+    assert len(log.table.partition_files()) == 1
     assert {
         r.url: (r.title, r.text) for r in log.read(spark).collect()
     } == want
-    import os
-
-    seg_dirs = [d for d in os.listdir(str(tmp_path / "log"))
-                if d.startswith("seg")]
-    assert seg_dirs == log.log.segments()
+    assert len(log.table.versions()) == log.table.keep
     # post-compaction ops keep working (sequence numbers keep rising)
     log.upsert(docs_df(spark, [("https://a.com/9", "Nine", "n")]))
     assert log.read(spark).count() == len(want) + 1
@@ -301,19 +301,16 @@ def test_log_structured_index_equivalent_to_snapshot(spark, tmp_path):
 def test_log_structured_index_crash_unlisted_segment_ignored(
     spark, tmp_path
 ):
-    """Crash contract: a segment directory not in the _SEGMENTS listing
-    (a torn write) is invisible to readers, and the next commit to that
-    sequence number overwrites it rather than double-counting."""
-    import os
-
+    """Crash contract: a segment written into a snapshot the pointer
+    never reached (a torn write) is invisible to readers, and the next
+    commit to that version overwrites it rather than double-counting."""
     log = IndexTable(str(tmp_path / "log"), log_structured=True)
     log.upsert(docs_df(spark, [("https://a.com/1", "One", "x")]))
-    # torn write at the NEXT sequence number
-    torn = str(tmp_path / "log" / "seg000002")
-    os.makedirs(torn)
-    docs_df(spark, [("https://evil.example/", "Torn", "y")]).write.mode(
-        "overwrite"
-    ).parquet(torn)
+    # torn write: the NEXT snapshot holds the next segment, unpublished
+    torn = os.path.join(log.table.snapshot(2), "seg=2")
+    log._new_rows(
+        docs_df(spark, [("https://evil.example/", "Torn", "y")])
+    ).withColumn("__op", F.lit("u")).write.mode("overwrite").parquet(torn)
     assert {r.url for r in log.read(spark).collect()} == {
         "https://a.com/1"
     }
@@ -337,7 +334,7 @@ def test_content_cache_log_structured_split_and_compact(spark, tmp_path):
         [Row(url="https://a.com/1", content=bytearray(b"ONE")),
          Row(url="https://a.com/2", content=bytearray(b"TWO"))]
     ))
-    assert len(cache.log.segments()) == 2  # appends, never rewrites
+    assert len(cache.table.partition_files()) == 2  # appends only
     assert cache.read(spark).count() == 2  # newest-wins dedups the rekey
 
     batch = spark.createDataFrame(
@@ -350,6 +347,21 @@ def test_content_cache_log_structured_split_and_compact(spark, tmp_path):
     assert [r.url for r in misses.collect()] == ["https://a.com/9"]
 
     cache.compact(spark)
-    assert len(cache.log.segments()) == 1
+    assert len(cache.table.partition_files()) == 1
     hits2, misses2 = cache.split_cached(batch)
     assert len(hits2.collect()) == 1 and len(misses2.collect()) == 1
+
+
+def test_log_structured_index_compacts_to_empty(spark, tmp_path):
+    """Upsert one doc, delete it, compact: the folded log holds no row,
+    so its partitioned write leaves no parquet file — the read still
+    returns 0 rows with the index's columns (the table supplies the
+    schema instead of inferring it from files)."""
+    idx = IndexTable(str(tmp_path / "log"), log_structured=True)
+    idx.upsert(docs_df(spark, [("https://a.com/1", "One", "x")]))
+    idx.delete(spark.createDataFrame([("https://a.com/1",)], ["url"]))
+    idx.compact(spark)
+    assert idx.table.partition_files() == {}
+    out = idx.read(spark)
+    assert out.count() == 0
+    assert out.columns == ["doc_id", "url", "title", "text"]

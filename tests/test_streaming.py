@@ -775,10 +775,11 @@ def test_resolved_map_store_bucket_pruned_write(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from incubator_stormcrawler_spark.streaming.frontier_table import (
+        RESOLVED_MAP_BUCKETS as NB,
         ResolvedMapStore,
     )
 
-    store = ResolvedMapStore(str(tmp_path / "map_v"), n_buckets=8)
+    store = ResolvedMapStore(str(tmp_path / "map"))
     base = spark.range(2000).selectExpr(
         "concat('https://h', id, '.example/') as url",
         "concat('https://t', id, '.example/') as target",
@@ -787,9 +788,8 @@ def test_resolved_map_store_bucket_pruned_write(spark, tmp_path):
     )
     v1 = store.write(base)
     assert v1 == 1
-    v1_path = store.versions()[-1][1]
-    before = _bucket_inodes(v1_path)
-    assert len(before) == 8  # 2000 urls populate every bucket
+    before = _bucket_inodes(store.snapshot())
+    assert len(before) == NB  # 2000 urls populate every bucket
 
     changed = spark.createDataFrame(
         [("https://h7.example/",), ("https://new.example/",)], ["url"]
@@ -808,15 +808,14 @@ def test_resolved_map_store_bucket_pruned_write(spark, tmp_path):
     )
     v2 = store.write(new_map, changed=changed)
     assert v2 == 2
-    v2_path = store.versions()[-1][1]
-    after = _bucket_inodes(v2_path)
+    after = _bucket_inodes(store.snapshot())
     touched = {
         r.b
         for r in changed.select(
-            F.pmod(F.xxhash64("url"), F.lit(8)).cast("int").alias("b")
+            F.pmod(F.xxhash64("url"), F.lit(NB)).cast("int").alias("b")
         ).collect()
     }
-    assert touched and len(touched) < 8  # the prune is non-trivial
+    assert touched and len(touched) < NB  # the prune is non-trivial
     for b in before:
         if b in touched:
             assert after[b] != before[b]
@@ -828,43 +827,120 @@ def test_resolved_map_store_bucket_pruned_write(spark, tmp_path):
     assert got["https://h7.example/"] == "https://elsewhere.example/"
     assert got["https://new.example/"] == "https://t.example/"
     assert got["https://h3.example/"] == "https://t3.example/"
-    # superseded versions vacuumed
-    assert [v for v, _ in store.versions()] == [2]
+    # superseded versions vacuumed (keep=1)
+    assert store.versions() == [2]
 
 
 def test_resolved_map_store_crash_retry_safe(spark, tmp_path):
     """The r12 ADVICE medium item: a crash mid-write leaves an
-    UNCOMMITTED partial snapshot that readers ignore and the retry
-    reclaims — and because versions are monotonic (not
-    generation-derived), the retry never overwrites the snapshot its
-    own plan reads the prior map from. A retry whose delta was already
-    folded commits an all-linked snapshot: zero parquet bytes written."""
-    import shutil
-
+    UNPUBLISHED partial snapshot (the pointer never moved) that readers
+    ignore and the retry reclaims — and because versions are monotonic
+    (not generation-derived), the retry never overwrites the snapshot
+    its own plan reads the prior map from. A retry whose delta was
+    already folded commits an all-linked snapshot: zero parquet bytes
+    written."""
     from incubator_stormcrawler_spark.streaming.frontier_table import (
         ResolvedMapStore,
     )
 
-    store = ResolvedMapStore(str(tmp_path / "map_v"), n_buckets=4)
+    store = ResolvedMapStore(str(tmp_path / "map"))
     base = spark.range(100).selectExpr(
         "concat('u', id) as url", "concat('t', id) as target",
         "cast(1 as bigint) as hops", "cast(1 as int) as resolved",
     )
     store.write(base)
-    # simulate a crashed attempt: partial v2 without _COMMIT
-    crashed = str(tmp_path / "map_v2")
+    # simulate a crashed attempt: partial v2, pointer never flipped
+    crashed = store.snapshot(2)
     os.makedirs(crashed)
     with open(os.path.join(crashed, "junk.parquet"), "w") as f:
         f.write("torn")
-    assert [v for v, _ in store.versions()] == [1]  # reader ignores it
+    assert store.versions() == [1]  # reader ignores it
     assert store.read(spark).count() == 100
     # the retry reclaims slot 2 and commits
     empty_delta = spark.createDataFrame([], "url string")
-    v1_inodes = _bucket_inodes(store.versions()[-1][1])
+    v1_inodes = _bucket_inodes(store.snapshot())
     v2 = store.write(base, changed=empty_delta)
     assert v2 == 2
     assert not os.path.exists(os.path.join(crashed, "junk.parquet"))
     # already-folded retry: every bucket carried forward by identity
-    assert _bucket_inodes(store.versions()[-1][1]) == v1_inodes
+    assert _bucket_inodes(store.snapshot()) == v1_inodes
     assert store.read(spark).count() == 100
-    shutil.rmtree(str(tmp_path / "map_v2"), ignore_errors=True)
+
+
+@pytest.mark.parametrize("mode", ["replace", "carry_forward", "append"])
+def test_versioned_table_crash_points(spark, tmp_path, monkeypatch, mode):
+    """The one commit step's crash contract, in each of its modes:
+
+    1. ``os.replace`` of the pointer fails — the table still reads at the
+       old version, and the retry gives the single-run result;
+    2. the flip landed but the ack was lost — a retry tagged with the
+       same batch id is a no-op.
+
+    Carry-forward and append also keep every partition they do not
+    rewrite byte-identical (hard links to the previous snapshot)."""
+    from incubator_stormcrawler_spark.streaming import frontier_table as ftm
+
+    ddl = "k int, v string, p int"
+    base = spark.createDataFrame(
+        [(i, "old", i % 3) for i in range(9)], ddl
+    )
+    step = {  # (partition_by, rows committed, rewrites)
+        "replace": (None, [(1, "new", 0), (2, "new", 5)], None),
+        "carry_forward": ("p", [(1, "new", 1), (4, "new", 1)], [1]),
+        "append": ("p", [(100, "new", 3)], [3]),
+    }[mode]
+    partition_by, rows, rewrites = step
+
+    def table(name):
+        t = ftm.VersionedTable(str(tmp_path / name), partition_by)
+        t.commit(base, batch_id="b0")
+        return t
+
+    def content(t):
+        return sorted(tuple(r) for r in t.read(spark, schema=ddl).collect())
+
+    def inodes(t, part):
+        d = os.path.join(t.snapshot(), f"{partition_by}={part}")
+        return {os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d)
+                if f.endswith(".parquet")}
+
+    ref = table("ref")
+    ref.commit(spark.createDataFrame(rows, ddl), rewrites, batch_id="b1")
+    expected = content(ref)
+    assert expected != content(table("base"))
+
+    t = table("crash")
+    before = content(t)
+    carried = [0, 2] if partition_by else []
+    carried_inodes = {p: inodes(t, p) for p in carried}
+    real_replace = os.replace
+
+    def dying_replace(src, dst):
+        if dst == t._pointer:
+            raise OSError("simulated crash before pointer flip")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(ftm.os, "replace", dying_replace)
+    with pytest.raises(OSError, match="simulated crash"):
+        t.commit(spark.createDataFrame(rows, ddl), rewrites, batch_id="b1")
+    monkeypatch.setattr(ftm.os, "replace", real_replace)
+    assert os.path.isdir(t.snapshot(2))  # the unpublished snapshot
+    assert t.current_version() == 1 and t.versions() == [1]
+    assert t.last_batch_id() == "b0"
+    assert content(t) == before
+
+    assert t.commit(
+        spark.createDataFrame(rows, ddl), rewrites, batch_id="b1"
+    ) == 2
+    assert content(t) == expected
+    assert t.last_batch_id() == "b1"
+    for p in carried:
+        assert inodes(t, p) == carried_inodes[p]
+
+    # the ack was lost: the tagged retry writes nothing
+    assert t.commit(
+        spark.createDataFrame(rows, ddl), rewrites, batch_id="b1"
+    ) == 2
+    assert t.versions() == [1, 2]
+    assert not os.path.exists(t.snapshot(3))
+    assert content(t) == expected

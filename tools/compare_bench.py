@@ -37,14 +37,18 @@ def main() -> None:
         r = tb / ta
         logs.append(math.log(r))
         rows.append((r, nm, ta, tb))
+    if not rows:
+        print("no common queries with positive timings in both files")
+        return
     rows.sort()
     n_imp = sum(1 for r, *_ in rows if r < 1 - thr)
     n_reg = sum(1 for r, *_ in rows if r > 1 + thr)
+    # both totals over the same queries: those timed in both files
     print(f"n_common={len(rows)} improved>{int(thr*100)}%={n_imp} "
           f"regressed>{int(thr*100)}%={n_reg} "
           f"geomean_ratio={math.exp(sum(logs)/len(logs)):.3f} "
-          f"total {sum(a[n] for _, n, *_ in [(0,n) for n in common if a[n]>0]):.1f}"
-          f" -> {sum(b[n] for n in common if b[n]>0):.1f}")
+          f"total {sum(ta for _, _, ta, _ in rows):.1f}"
+          f" -> {sum(tb for _, _, _, tb in rows):.1f}")
     print("--- improved (B/A asc) ---")
     for r, nm, ta, tb in rows:
         if r < 1 - thr:

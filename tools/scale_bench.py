@@ -1185,20 +1185,18 @@ def curve_neardedup_incremental(spark, sizes):
 def curve_resolved_map_write(spark, tmp, sizes):
     """ResolvedMapStore commit cost — the r12 verdict item 2 'Done'
     criterion: the per-generation snapshot write tracks the DELTA, not
-    the map. n_buckets scales with the map (fixed ~250k-row buckets,
-    the 'bounded file size, growing file count' shape of any real table
-    format), so a fixed 16-url delta touches ≤ 16 buckets = a fixed
-    number of rewritten rows regardless of map size; every other bucket
-    hard-links. The A/B full (unpruned) write at each size shows what
-    the r12 loop paid every generation."""
+    the map. The map has RESOLVED_MAP_BUCKETS buckets, so a fixed
+    16-url delta touches ≤ 16 of them and every other bucket hard-links.
+    The A/B full (unpruned) write at each size shows what the r12 loop
+    paid every generation."""
     from incubator_stormcrawler_spark.streaming.frontier_table import (
+        RESOLVED_MAP_BUCKETS as nb,
         ResolvedMapStore,
     )
 
     out = []
     for n in sizes:
-        nb = max(16, n // 250_000)
-        store = ResolvedMapStore(f"{tmp}/map_{n}_v", n_buckets=nb)
+        store = ResolvedMapStore(f"{tmp}/map_{n}")
         base = spark.range(n).selectExpr(
             "concat('u', id) as url",
             "concat('t', id % 1000) as target",
