@@ -1826,8 +1826,15 @@ def weighted_pair_audit(
     # signature expansion) and the exact Σmin/Σmax leg are separate
     # subtrees over `terms`, so without the cut the corpus-sized
     # tokenize+explode+tf-groupBy ran twice per action. Lazy — the
-    # caller's single action materializes it.
-    terms = terms.localCheckpoint(eager=False)
+    # caller's single action materializes it. Serialized level, as
+    # linkrank._local_checkpoint_tracked: the JVM default keeps the
+    # corpus-sized table deserialized and thrashes GC at tens of
+    # millions of rows.
+    from pyspark import StorageLevel
+
+    terms = terms.localCheckpoint(
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
     sig = weighted_minhash_signatures(
         terms, num_hashes=num_hashes, hash_fn=hash_fn,
         max_weight=max_weight,

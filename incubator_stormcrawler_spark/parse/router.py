@@ -22,18 +22,24 @@ from .feed import parse_feeds, sniff_feed
 from .html import looks_like_html, parse_pages
 from .sitemap import parse_sitemaps, sniff_sitemap
 
-KIND_DDL = "url string, kind string"
-
 
 def classify_pages(pages: DataFrame) -> DataFrame:
-    """Adds a ``kind`` column: sitemap | feed | html | text | other."""
-    import pandas as pd
+    """Adds a ``kind`` column: sitemap | feed | html | text | other.
+
+    The column is appended in the same Arrow pass that sniffs the bytes,
+    so the output keeps ``pages``' rows and partitioning. Do not join
+    the kinds back on ``url``: AQE picks that join's strategy at run
+    time from whichever side's stage finishes first, so the output is
+    sometimes ``pages``' width and sometimes
+    ``spark.sql.shuffle.partitions`` wide, and a cache of it keeps
+    whichever width won."""
+    from pyspark.sql.types import StringType, StructField, StructType
 
     def run(batches):
         for pdf in batches:
             kinds = []
-            for row in pdf.itertuples(index=False):
-                content = bytes(row.content) if row.content is not None else b""
+            for raw in pdf["content"]:
+                content = bytes(raw) if raw is not None else b""
                 head = content[:512].lstrip()
                 if sniff_sitemap(content):
                     kinds.append("sitemap")
@@ -61,10 +67,12 @@ def classify_pages(pages: DataFrame) -> DataFrame:
                     kinds.append("text")
                 else:
                     kinds.append("other")
-            yield pd.DataFrame({"url": pdf["url"], "kind": kinds})
+            yield pdf.assign(kind=kinds)
 
-    kinds = pages.select("url", "content").mapInPandas(run, schema=KIND_DDL)
-    return pages.join(kinds, "url")
+    schema = StructType(
+        pages.schema.fields + [StructField("kind", StringType())]
+    )
+    return pages.mapInPandas(run, schema=schema)
 
 
 def parse_routed(pages: DataFrame, max_outlinks: int = 100):

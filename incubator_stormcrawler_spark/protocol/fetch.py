@@ -2,9 +2,10 @@
 (core/.../bolt/FetcherBolt.java:69; queues :251-302, delay :191-245,
 robots :525-634, emit :706-782) re-expressed for Spark's execution model.
 
-Design: ``repartition(key)`` co-locates every URL of a politeness key in
-one partition, then ``fetch_partition`` runs inside ``mapInPandas`` /
-``mapPartitions`` enforcing, per key: serial fetching, crawl-delay
+Design: ``politeness_partition`` hashes the batch by key into one
+partition per fetch slot, co-locating every URL of a politeness key, then
+``fetch_partition`` runs inside ``mapInPandas`` / ``mapPartitions``
+enforcing, per key: serial fetching, crawl-delay
 (robots ``Crawl-delay`` adopted when ≤ max_crawl_delay, else the queue is
 skipped — FetcherBolt.java:592-634), and robots allow/deny (deny →
 status ERROR with ``error.cause=robots.txt``, :525-590). Keys interleave
@@ -469,6 +470,19 @@ def fetch_partition_threaded(
     return results
 
 
+def politeness_partition(df, num_partitions: int | None = None):
+    """Hash-partition ``df`` by ``key`` into ``num_partitions`` partitions,
+    by default ``defaultParallelism``: one task per core / fetch slot,
+    whatever ``spark.sql.shuffle.partitions`` says. A key never spans two
+    partitions, so a host's politeness delay holds globally. AQE does not
+    coalesce a repartition-by-number, so the width is what every cache of
+    a generation downstream of it keeps (cached plans keep their output
+    partitioning)."""
+    if num_partitions is None:
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(num_partitions, "key")
+
+
 def fetch(
     frontier_batch,
     protocol_factory,
@@ -484,6 +498,11 @@ def fetch(
     ``protocol_factory``: zero-arg callable run ONCE PER EXECUTOR PROCESS
     (module-level memo) returning a Protocol — connection pools and robots
     caches live per executor, like the reference's per-bolt-instance caches.
+
+    The batch is laid out by ``politeness_partition``: hashed by ``key`` into
+    ``num_partitions`` partitions, by default ``defaultParallelism`` (one
+    fetch task per core / fetch slot, not ``spark.sql.shuffle.partitions``).
+    A batch already laid out that way is not shuffled again.
     """
     import pandas as pd
 
@@ -492,8 +511,9 @@ def fetch(
         "content binary, error_cause string, redirect_to string"
     )
 
-    df = frontier_batch.select("url", "key")
-    df = df.repartition(*([num_partitions] if num_partitions else []), "key")
+    df = politeness_partition(
+        frontier_batch.select("url", "key"), num_partitions
+    )
 
     def run(batches):
         # Politeness needs the WHOLE partition's queues before fetching

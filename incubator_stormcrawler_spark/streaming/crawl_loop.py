@@ -6,7 +6,9 @@ the frontier, the spout re-queries it
 one batch plan:
 
   frontier query (grouped top-k)            — operators/frontier.py
-    → repartition(key) → polite fetch       — protocol/fetch.py
+    → hash by key into defaultParallelism   — protocol/fetch.py
+      partitions (one per fetch slot, not
+      spark.sql.shuffle.partitions) → polite fetch
     → parse (HTML / sitemap / feed)         — parse/
     → outlink filter chain + metadata       — functions/filtering.py
     → status updates union                  — this module
@@ -36,7 +38,7 @@ from ..functions.filtering import URLFilterChain, apply_filter_chain
 from ..operators.frontier import frontier_topk
 from ..operators.status_merge import merge_status_updates
 from ..parse.html import parse_pages, split_parse_streams
-from ..protocol.fetch import fetch
+from ..protocol.fetch import fetch, politeness_partition
 from .frontier_table import FrontierTable, ResolvedMapStore
 
 
@@ -317,7 +319,7 @@ class CrawlLoop:
 
     def _release_gen_ckpts(self) -> None:
         for h in self._gen_ckpts:
-            h.unpersist(False)
+            h.unpersist(True)
         self._gen_ckpts = []
 
     def _near_dedup_filter(self, docs: DataFrame) -> tuple:
@@ -546,10 +548,6 @@ class CrawlLoop:
         self.generation += 1
         now = self.now_fn(self.generation)
         frontier = self.read_frontier()
-        # cache the generation batch: it feeds the fetch stage, the
-        # outlink-depth broadcast AND the batch counter — uncached, the
-        # frontier scan + grouped-top-k window re-executes for each
-        # (measured ~3× per generation in round 3's 537 p/s regression)
         ranks = self._host_ranks() if self.rank_priority else None
         # with forecast sizing on, the global max_results cap is DEFERRED
         # until after the politeness-forecast filter: capping first would
@@ -615,7 +613,16 @@ class CrawlLoop:
                     batch = batch.orderBy(
                         F.col("next_fetch_date").asc(), F.col("url").asc()
                     ).limit(self.max_results)
-        batch = batch.select("url", "key", "depth").cache()
+        # cache the generation batch: it feeds the fetch stage, the
+        # outlink-depth broadcast AND the batch counter — uncached, the
+        # frontier scan + grouped-top-k window re-executes for each
+        # (measured ~3× per generation in round 3's 537 p/s regression).
+        # It is cached already in the fetch's layout: the fetch then
+        # reuses it without a second exchange, and the top-k window's
+        # exchange is not the cached plan's last stage, so AQE coalesces
+        # it instead of running spark.sql.shuffle.partitions tasks
+        batch = politeness_partition(batch.select("url", "key", "depth"))
+        batch = batch.cache()
 
         cache_hits = 0
         if self.content_cache is not None:
@@ -1064,12 +1071,14 @@ class CrawlLoop:
                 "generation", F.lit(self.generation)
             ).write.mode("append").parquet(self.metrics_path + "_status")
         # release every per-generation cache — leaked cached RDDs accumulate
-        # block-manager memory across generations and degrade later shuffles
+        # block-manager memory across generations and degrade later shuffles.
+        # Blocking: the removal is this generation's work, not background
+        # work racing the next generation's first jobs
         for df in (batch, discovered, outlinks, classified, sitemaps, feeds,
                    fetched, parsed):
-            df.unpersist()
+            df.unpersist(blocking=True)
         if hits is not None:
-            hits.unpersist()
+            hits.unpersist(blocking=True)
         # ...and every tracked checkpoint this generation created (side
         # stores, near-dedup signatures, resolve delta): by here all of
         # them have been written or counted

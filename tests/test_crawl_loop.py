@@ -1184,3 +1184,60 @@ def test_generation_storage_is_bounded_across_generations(spark, tmp_path):
     # earlier ones (small constant slack for the live rank table and
     # any in-flight async unpersists)
     assert after5 <= after2 + 3, (after2, after5)
+
+
+def test_generation_width_follows_fetch_slots_not_shuffle_partitions(
+    spark, tmp_path
+):
+    """The fetch exchange is sized to the fetch slots (defaultParallelism),
+    not to spark.sql.shuffle.partitions. Every intermediate the generation
+    caches keeps its plan's last exchange width (cached plans keep their
+    output partitioning), so with a shuffle-partition-sized exchange a
+    generation's task count grows with the setting; sized to the slots it
+    stays flat."""
+    from incubator_stormcrawler_spark.protocol.fetch import fetch
+
+    site = build_site(6, 4)
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    tasks = {}
+    try:
+        for width in (32, 128):
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+            batch = spark.createDataFrame(
+                [(u, u.split("/")[2]) for u in site], ["url", "key"]
+            )
+            out = fetch(batch, lambda: MemoryProtocol(site), server_delay=0.0,
+                        respect_robots=False)
+            assert out.rdd.getNumPartitions() == slots
+
+            loop = CrawlLoop(
+                spark,
+                frontier_path=str(tmp_path / f"frontier{width}"),
+                protocol_factory=lambda: MemoryProtocol(site),
+                server_delay=0.0,
+                bucket_partitioned=True,
+            )
+            loop.inject_seeds(spark.createDataFrame(
+                [(u,) for u in site if u.endswith("/p0")], ["url"]
+            ))
+            group = f"generation-width-{width}"
+            sc.setJobGroup(group, "one generation")
+            try:
+                assert loop.run_generation()["batch"] == 6
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            tracker = sc.statusTracker()
+            stage_ids = {
+                s for j in tracker.getJobIdsForGroup(group)
+                for s in tracker.getJobInfo(j).stageIds
+            }
+            tasks[width] = sum(
+                tracker.getStageInfo(s).numCompletedTasks for s in stage_ids
+                if tracker.getStageInfo(s) is not None
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert tasks[128] <= 1.25 * tasks[32], tasks

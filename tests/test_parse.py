@@ -221,6 +221,33 @@ def test_parse_router(spark):
     assert [r.url for r in out["other"].collect()] == ["https://a.example/img.png"]
 
 
+def test_classify_pages_keeps_rows_and_partitioning(spark):
+    """The kind is appended in the sniffing pass itself: no join back on
+    url, so no runtime join choice can re-partition the output (a cache
+    of it keeps the input's width), and a url seen twice stays two rows."""
+    from pyspark.sql import Row
+    from incubator_stormcrawler_spark.parse.router import classify_pages
+
+    pages = spark.createDataFrame(
+        [
+            Row(url="https://a.example/page", content=bytearray(HTML)),
+            Row(url="https://a.example/page", content=bytearray(HTML)),
+            Row(url="https://a.example/map", content=bytearray(SITEMAP)),
+            Row(url="https://a.example/note", content=bytearray(b"plain")),
+        ]
+    ).repartition(3, "url")
+    out = classify_pages(pages)
+    assert "Join" not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.columns == ["url", "content", "kind"]
+    assert out.rdd.getNumPartitions() == 3
+    assert sorted((r.url, r.kind) for r in out.collect()) == [
+        ("https://a.example/map", "sitemap"),
+        ("https://a.example/note", "text"),
+        ("https://a.example/page", "html"),
+        ("https://a.example/page", "html"),
+    ]
+
+
 def test_media_link_extraction():
     """LinkParseFilter analog (parse/filter/LinkParseFilter.java): harvest
     //IMG/@src-style links."""

@@ -155,7 +155,9 @@ def test_fetch_partition_crawl_delay_too_long():
 
 
 def test_fetch_spark_stage(spark):
-    """End-to-end fetch() on a tiny in-memory site across partitions."""
+    """End-to-end fetch() on a tiny in-memory site across partitions. The
+    exchange has one partition per fetch slot (defaultParallelism), not
+    spark.sql.shuffle.partitions, unless num_partitions says otherwise."""
     from pyspark.sql import Row
     from incubator_stormcrawler_spark.protocol.fetch import fetch
 
@@ -165,10 +167,14 @@ def test_fetch_spark_stage(spark):
     )
     out = fetch(batch, lambda: MemoryProtocol(site), server_delay=0.0,
                 respect_robots=False)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     rows = out.collect()
     assert len(rows) == 12
     assert all(r.status == "FETCHED" for r in rows)
     assert {bytes(r.content).decode() for r in rows} == set(site.values())
+    out3 = fetch(batch, lambda: MemoryProtocol(site), server_delay=0.0,
+                 respect_robots=False, num_partitions=3)
+    assert out3.rdd.getNumPartitions() == 3
 
 
 def test_threads_per_queue_min_delay():
