@@ -91,7 +91,6 @@ def build_crawl_loop(
         # ZORDER-clustered) every N generations on the bucketed table
         compact_every=int(conf.get("frontier.compact.every", 0)),
         compact_zorder=bool(conf.get("frontier.compact.zorder", False)),
-        compact_curve=str(conf.get("frontier.compact.curve", "morton")),
         warc_dir=conf.get("warc.dir"),
         rank_priority=bool(conf.get("spout.rank.priority", False)),
         rank_max_buckets=int(conf.get("spout.rank.max.buckets", 10)),

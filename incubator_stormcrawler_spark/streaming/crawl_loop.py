@@ -23,6 +23,14 @@ plan rewrite here and maps 1:1 onto ``MERGE INTO`` where available.
 Lineage + an idempotent merge replace Storm's ack/fail at-least-once
 contract.
 
+A generation's caches and checkpoints last exactly one generation: it
+runs inside one scope that, on exit, normal or by exception, releases
+(blocking) every CacheManager entry and persistent RDD created in it,
+checkpoint blocks included (neither ``DataFrame.unpersist`` nor GC frees
+those). It keeps what existed before, including a caller's lazily cached
+frame the generation first materializes, and the host-rank table, held
+across generations on purpose. A failed generation's retry starts clean.
+
 At 100 TB: write the frontier partitioned by ``bucket`` and run
 generations per bucket-shard (frontier_topk's ``bucket`` arg) — each
 generation then scans one shard's files only, and multiple shards can
@@ -31,6 +39,9 @@ crawl concurrently without overlapping politeness keys.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +51,23 @@ from ..operators.status_merge import merge_status_updates
 from ..parse.html import parse_pages, split_parse_streams
 from ..protocol.fetch import fetch, politeness_partition
 from .frontier_table import FrontierTable, ResolvedMapStore
+
+# MinHash parameters of the near-dedup signature store: each kept doc
+# stores NEAR_DEDUP_NUM_HASHES signature rows and one band key per
+# NEAR_DEDUP_BAND_ROWS of them, so the store's layout depends on them
+NEAR_DEDUP_NUM_HASHES = 8
+NEAR_DEDUP_BAND_ROWS = 2
+NEAR_DEDUP_NGRAM = 3
+# power iterations of the host PageRank behind rank_priority
+RANK_ITERATIONS = 3
+
+
+def _ckpt(df: DataFrame) -> DataFrame:
+    """Lazy localCheckpoint, blocks stored serialized (see
+    linkrank._local_checkpoint_tracked)."""
+    return df.localCheckpoint(
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
 
 
 class CrawlLoop:
@@ -70,19 +98,14 @@ class CrawlLoop:
         canonicalize_redirects: bool = False,
         near_dedup: bool = False,
         near_dedup_min_sim: float = 0.9,
-        near_dedup_num_hashes: int = 8,
-        near_dedup_band_rows: int = 2,
-        near_dedup_ngram: int = 3,
         rank_priority: bool = False,
         rank_max_buckets: int = 10,
-        rank_iterations: int = 3,
         rank_refresh_every: int = 1,
         forecast_sizing: bool = False,
         forecast_horizon_s: float = 60.0,
         forecast_delays: DataFrame | None = None,
         compact_every: int = 0,
         compact_zorder: bool = False,
-        compact_curve: str = "morton",
         compact_max_files_per_bucket: int = 4,
     ):
         self.spark = spark
@@ -146,7 +169,6 @@ class CrawlLoop:
         # yet) falls back to the plain urgency-ordered top-k.
         self.rank_priority = rank_priority
         self.rank_max_buckets = rank_max_buckets
-        self.rank_iterations = rank_iterations
         # rank_refresh_every > 1 amortizes the per-generation host
         # PageRank (the same staleness trade as bloom_refresh_every, and
         # safer: a stale rank only re-ORDERS hosts, every due host still
@@ -157,7 +179,6 @@ class CrawlLoop:
         self._ranks_cache = None
         self._ranks_built_gen = -(10**9)
         self._ranks_ckpt = None   # tracked blocks of the live rank table
-        self._gen_ckpts: list = []  # per-generation checkpoint handles
         # warc_dir archives every generation's successful fetches as
         # rotating .warc.gz files (the reference's WARCHdfsBolt sitting on
         # the fetcher's output stream: external/warc/.../WARCHdfsBolt);
@@ -212,9 +233,6 @@ class CrawlLoop:
         # layered onto the same loop.
         self.near_dedup = near_dedup
         self.near_dedup_min_sim = near_dedup_min_sim
-        self.near_dedup_num_hashes = near_dedup_num_hashes
-        self.near_dedup_band_rows = near_dedup_band_rows
-        self.near_dedup_ngram = near_dedup_ngram
         # forecast_sizing=True caps each host's generation share at its
         # politeness-limited fetch forecast (frontier.fetch_forecast):
         # least(due backlog, floor(horizon/delay) + 1) for the configured
@@ -242,10 +260,6 @@ class CrawlLoop:
         # skip files by footer stats (see FrontierTable.compact).
         self.compact_every = compact_every
         self.compact_zorder = compact_zorder
-        # curve="hilbert" clusters with the FSM Hilbert key instead of
-        # the Morton interleave (tighter per-file footers on skewed
-        # date/host data; see FrontierTable.compact)
-        self.compact_curve = compact_curve
         self.compact_max_files_per_bucket = compact_max_files_per_bucket
         self.table = FrontierTable(
             frontier_path,
@@ -303,24 +317,46 @@ class CrawlLoop:
     def _minhash_bands_path(self) -> str:
         return self.frontier_path + "_minhash_bands"
 
-    def _ckpt(self, df: DataFrame) -> DataFrame:
-        """Eager localCheckpoint with TRACKED storage (the r12 finding:
-        checkpoint blocks are invisible to DataFrame.unpersist and do
-        NOT free on GC, so every per-generation checkpoint would leak
-        its blocks for the life of the crawl — unbounded over thousands
-        of generations). Handles collect on the generation and release
-        at its end, once everything derived from them has been written
-        or counted."""
-        from ..operators.linkrank import _local_checkpoint_tracked
+    @contextmanager
+    def _generation_scope(self):
+        """The generation scope of the module docstring. Storage is told
+        apart by difference, so what operators cache or checkpoint
+        internally goes too, as does what another thread creates
+        meanwhile: the loop owns its session for a generation."""
+        jvm, jsession = self.spark._jvm, self.spark._jsparkSession
+        jsc = self.spark.sparkContext._jsc
+        cache_manager = jsession.sharedState().cacheManager()
 
-        out, handle = _local_checkpoint_tracked(df)
-        self._gen_ckpts.append(handle)
-        return out
+        def cached_entries():  # newest first: dependents before bases
+            data = cache_manager.cachedData()
+            return [data.apply(i) for i in range(data.size())]
 
-    def _release_gen_ckpts(self) -> None:
-        for h in self._gen_ckpts:
-            h.unpersist(True)
-        self._gen_ckpts = []
+        def persistent_rdds():
+            return set(jsc.getPersistentRDDs().keySet().toArray())
+
+        # by plan identity: re-planning a released entry's dependents
+        # copies the entry but keeps its plan object
+        prior = jvm.java.util.Collections.newSetFromMap(
+            jvm.java.util.IdentityHashMap()
+        )
+        for entry in cached_entries():
+            prior.add(entry.plan())
+        keep_rdds = persistent_rdds()
+        try:
+            yield
+        finally:
+            for entry in cached_entries():
+                builder = entry.cachedRepresentation().cacheBuilder()
+                if not prior.contains(entry.plan()):
+                    cache_manager.uncacheQuery(
+                        jsession, entry.plan(), False, True
+                    )
+                elif builder.isCachedColumnBuffersLoaded():
+                    keep_rdds.add(builder.cachedColumnBuffers().id())
+            if self._ranks_ckpt is not None:
+                keep_rdds.update(self._ranks_ckpt._ids)
+            for rdd_id in persistent_rdds() - keep_rdds:
+                jsc.sc().unpersistRDD(rdd_id, True)
 
     def _near_dedup_filter(self, docs: DataFrame) -> tuple:
         """Drop near-duplicate docs from this generation's index stream
@@ -357,21 +393,12 @@ class CrawlLoop:
             incremental_lsh_dedup,
             minhash_signatures,
         )
-        from ..operators.linkrank import _CheckpointHandle
-
-        # blanket storage tracking: incremental_lsh_dedup checkpoints
-        # internal relations (the unioned signature set, the banded
-        # flags) that the caller cannot reach — register EVERYTHING this
-        # block creates for the generation-end release (double-release
-        # of the explicitly tracked frames below is a no-op)
-        sc = self.spark.sparkContext
-        ids_before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
         batch = docs.select(
             F.col("url").alias("doc_id"), F.col("text")
         ).where(F.col("text").isNotNull() & (F.col("text") != ""))
-        batch_sigs = self._ckpt(minhash_signatures(
-            batch, self.near_dedup_num_hashes, self.near_dedup_ngram
+        batch_sigs = _ckpt(minhash_signatures(
+            batch, NEAR_DEDUP_NUM_HASHES, NEAR_DEDUP_NGRAM
         ))
         sp = self._minhash_sigs_path()
         bp = self._minhash_bands_path()
@@ -382,7 +409,7 @@ class CrawlLoop:
                 # were persisted (the only store-sized banding groupBy
                 # this path ever runs again)
                 band_keys(
-                    index_sigs, self.near_dedup_band_rows
+                    index_sigs, NEAR_DEDUP_BAND_ROWS
                 ).write.mode("overwrite").parquet(bp)
             index_bands = self.spark.read.parquet(bp)
         else:
@@ -393,16 +420,16 @@ class CrawlLoop:
         pairs = incremental_lsh_dedup(
             batch,
             index_sigs,
-            num_hashes=self.near_dedup_num_hashes,
-            band_rows=self.near_dedup_band_rows,
-            n=self.near_dedup_ngram,
+            num_hashes=NEAR_DEDUP_NUM_HASHES,
+            band_rows=NEAR_DEDUP_BAND_ROWS,
+            n=NEAR_DEDUP_NGRAM,
             min_est_sim=self.near_dedup_min_sim,
             batch_sigs=batch_sigs,
             index_bands=index_bands,
         )
         # doc2 is always the batch side (within-batch pairs id-ordered),
         # so dropping distinct doc2 keeps one representative per cluster
-        drops = self._ckpt(
+        drops = _ckpt(
             pairs.select(F.col("doc2").alias("url")).distinct()
         )
         n_dropped = drops.count()
@@ -417,7 +444,7 @@ class CrawlLoop:
                 "doc_id",
                 "left_anti",
             )
-        kept_sigs = self._ckpt(kept_sigs)
+        kept_sigs = _ckpt(kept_sigs)
         if kept_sigs.count():
             # BANDS FIRST: store membership (the first-wins anti-join)
             # is decided by the SIGNATURE store, so a crash between the
@@ -426,14 +453,10 @@ class CrawlLoop:
             # pairs, which the match's distinct() absorbs. (Sigs-first
             # would strand docs with signatures but no bands: invisible
             # to the band match forever.)
-            band_keys(kept_sigs, self.near_dedup_band_rows).write.mode(
+            band_keys(kept_sigs, NEAR_DEDUP_BAND_ROWS).write.mode(
                 "append"
             ).parquet(bp)
             kept_sigs.write.mode("append").parquet(sp)
-        ids_after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        self._gen_ckpts.append(
-            _CheckpointHandle(sc, ids_after - ids_before)
-        )
         return kept, n_dropped
 
     def _compact_edge_stores(self) -> None:
@@ -453,7 +476,7 @@ class CrawlLoop:
         ):
             if not os.path.exists(path):
                 continue
-            snap = self._ckpt(self.spark.read.parquet(path))
+            snap = _ckpt(self.spark.read.parquet(path))
             (
                 snap.repartition(self.compact_max_files_per_bucket)
                 .write.mode("overwrite")
@@ -469,7 +492,7 @@ class CrawlLoop:
         materialized localCheckpoint in between)."""
         import os
 
-        from ..operators.linkrank import link_rank
+        from ..operators.linkrank import _local_checkpoint_tracked, link_rank
 
         path = self._host_edges_path()
         if not os.path.exists(path):
@@ -480,26 +503,12 @@ class CrawlLoop:
             < self.rank_refresh_every
         )
         if not fresh_enough:
-            from ..operators.linkrank import (
-                _CheckpointHandle,
-                _local_checkpoint_tracked,
-            )
-
-            sc = self.spark.sparkContext
-            before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
             edges = self.spark.read.parquet(path)
-            ranks_plan = link_rank(edges, iterations=self.rank_iterations)
-            new_cache, new_ckpt = _local_checkpoint_tracked(ranks_plan)
-            # everything ELSE the refresh registered (link_rank's
-            # internal per-iteration checkpoints and node/edge caches)
-            # is released now that the final table is materialized; the
-            # PREVIOUS generation's rank table releases on replacement —
-            # without this, every refresh leaked its blocks for the life
-            # of the crawl (checkpoints neither unpersist nor GC-free)
-            after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-            _CheckpointHandle(
-                sc, (after - before) - set(new_ckpt._ids)
-            ).unpersist(False)
+            new_cache, new_ckpt = _local_checkpoint_tracked(
+                link_rank(edges, iterations=RANK_ITERATIONS)
+            )
+            # the previous table is released on replacement; link_rank's
+            # internal caches and checkpoints go with the generation
             if self._ranks_ckpt is not None:
                 self._ranks_ckpt.unpersist(False)
             self._ranks_cache, self._ranks_ckpt = new_cache, new_ckpt
@@ -544,8 +553,13 @@ class CrawlLoop:
 
     # -- one generation ----------------------------------------------------
     def run_generation(self) -> dict:
-        """Run one fetch-parse-merge generation; returns counters."""
+        """Run one fetch-parse-merge generation in its own generation
+        scope; returns counters."""
         self.generation += 1
+        with self._generation_scope():
+            return self._generate()
+
+    def _generate(self) -> dict:
         now = self.now_fn(self.generation)
         frontier = self.read_frontier()
         ranks = self._host_ranks() if self.rank_priority else None
@@ -758,7 +772,7 @@ class CrawlLoop:
                 gen_host_edges = gen_host_edges.join(
                     self.spark.read.parquet(hp), ["src", "dst"], "left_anti"
                 )
-            gen_host_edges = self._ckpt(gen_host_edges)
+            gen_host_edges = _ckpt(gen_host_edges)
             if gen_host_edges.count():
                 gen_host_edges.write.mode("append").parquet(hp)
         # xml/other pages report FETCHED (pass-through bolts ack to status)
@@ -909,7 +923,6 @@ class CrawlLoop:
         n_near_dups = 0
         if self.index is not None:
             docs_to_index = docs
-            resolve_cache: list = []
             if self.canonicalize_redirects:
                 import os
 
@@ -937,7 +950,7 @@ class CrawlLoop:
                     .groupBy("src")
                     .agg(F.min("dst").alias("dst"))
                 )
-                gen_edges = self._ckpt(gen_edges)
+                gen_edges = _ckpt(gen_edges)
                 # edge store FIRST, map second — the crash-retry order:
                 # a retried generation re-observes the same hops, so a
                 # store-anti-joined append is idempotent, and a map that
@@ -953,7 +966,7 @@ class CrawlLoop:
                         "src",
                         "left_anti",
                     )
-                fresh_edges = self._ckpt(fresh_edges)
+                fresh_edges = _ckpt(fresh_edges)
                 if fresh_edges.count():
                     fresh_edges.write.mode("append").parquet(rp)
                 # a generation that observed NO hops leaves the map
@@ -965,7 +978,6 @@ class CrawlLoop:
                     delta_h: list = []
                     new_map = incremental_redirect_resolve(
                         prior, gen_edges, max_hops=64,
-                        cache_handle=resolve_cache,
                         delta_handle=delta_h,
                     )
                     # only buckets holding the delta's urls rewrite; a
@@ -974,9 +986,6 @@ class CrawlLoop:
                     self._resolved_store.write(
                         new_map, changed=delta_h[0].select("url")
                     )
-                    for cached in resolve_cache:
-                        cached.unpersist(False)
-                    resolve_cache = []
                 if os.path.exists(rp):
                     from pyspark.sql import Window
 
@@ -1005,8 +1014,6 @@ class CrawlLoop:
                     docs_to_index
                 )
             self.index.upsert(docs_to_index)
-            for cached in resolve_cache:
-                cached.unpersist(False)
         if self.index is not None:
             # frontier still holds the PREVIOUS state here; compare after
             # the merge below to find this generation's new ERRORs
@@ -1045,7 +1052,6 @@ class CrawlLoop:
                     self.spark,
                     max_files_per_bucket=self.compact_max_files_per_bucket,
                     zorder=self.compact_zorder,
-                    curve=self.compact_curve,
                 )
             # the host/redirect edge side stores ride the same cadence:
             # logically distinct already, but delta appends leave one
@@ -1070,19 +1076,6 @@ class CrawlLoop:
             _status_counts(merged).withColumn(
                 "generation", F.lit(self.generation)
             ).write.mode("append").parquet(self.metrics_path + "_status")
-        # release every per-generation cache — leaked cached RDDs accumulate
-        # block-manager memory across generations and degrade later shuffles.
-        # Blocking: the removal is this generation's work, not background
-        # work racing the next generation's first jobs
-        for df in (batch, discovered, outlinks, classified, sitemaps, feeds,
-                   fetched, parsed):
-            df.unpersist(blocking=True)
-        if hits is not None:
-            hits.unpersist(blocking=True)
-        # ...and every tracked checkpoint this generation created (side
-        # stores, near-dedup signatures, resolve delta): by here all of
-        # them have been written or counted
-        self._release_gen_ckpts()
         return counts
 
     def run(self, generations: int) -> list[dict]:

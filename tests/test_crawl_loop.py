@@ -1106,16 +1106,16 @@ def test_near_dedup_reingest_keeps_first_signatures(spark, tmp_path):
         return spark.createDataFrame(list(rows), ["url", "text"])
 
     # gen 1: page A (v1 content) ingests and stores
-    kept, dropped = loop._near_dedup_filter(docs(("urlA", text_v1)))
-    assert (kept.count(), dropped) == (1, 0)
-    loop._release_gen_ckpts()
+    with loop._generation_scope():
+        kept, dropped = loop._near_dedup_filter(docs(("urlA", text_v1)))
+        assert (kept.count(), dropped) == (1, 0)
     sigs_v1 = {(r.h, r.v) for r in spark.read.parquet(
         loop._minhash_sigs_path()).where("doc_id = 'urlA'").collect()}
     # gen 2: A re-crawled with CHANGED content — kept (no self-match),
     # store signatures unchanged (first-wins)
-    kept, dropped = loop._near_dedup_filter(docs(("urlA", text_v2)))
-    assert (kept.count(), dropped) == (1, 0)
-    loop._release_gen_ckpts()
+    with loop._generation_scope():
+        kept, dropped = loop._near_dedup_filter(docs(("urlA", text_v2)))
+        assert (kept.count(), dropped) == (1, 0)
     store = spark.read.parquet(loop._minhash_sigs_path())
     assert {(r.h, r.v) for r in store.where("doc_id = 'urlA'").collect()} \
         == sigs_v1
@@ -1123,29 +1123,40 @@ def test_near_dedup_reingest_keeps_first_signatures(spark, tmp_path):
         F.col("count") != 8).count() == 0
     # gen 3: D duplicates A's NEW content — the blind spot: NOT dropped;
     # E duplicates A's ORIGINAL content — still dropped
-    kept, dropped = loop._near_dedup_filter(
-        docs(("urlD", text_v2 + " extra"), ("urlE", text_v1 + " extra"))
-    )
-    kept_urls = {r.url for r in kept.collect()}
-    loop._release_gen_ckpts()
+    with loop._generation_scope():
+        kept, dropped = loop._near_dedup_filter(
+            docs(("urlD", text_v2 + " extra"), ("urlE", text_v1 + " extra"))
+        )
+        kept_urls = {r.url for r in kept.collect()}
     assert dropped == 1
     assert kept_urls == {"urlD"}
     # once D itself is stored, the blind window closes: a later copy of
     # the new content near-dups against D
-    kept, dropped = loop._near_dedup_filter(docs(("urlF", text_v2)))
-    assert (dropped, {r.url for r in kept.collect()}) == (1, set())
-    loop._release_gen_ckpts()
+    with loop._generation_scope():
+        kept, dropped = loop._near_dedup_filter(docs(("urlF", text_v2)))
+        assert (dropped, {r.url for r in kept.collect()}) == (1, set())
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _persistent_rdds(spark) -> set:
+    return set(
+        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    )
 
 
 def test_generation_storage_is_bounded_across_generations(spark, tmp_path):
     """The r12 leak finding, applied to the loop: checkpoint blocks are
-    invisible to DataFrame.unpersist and do not free on GC, so the
-    per-generation checkpoints (side-store deltas, near-dedup
-    signatures, resolve rounds, rank refreshes) must be TRACKED and
-    released — otherwise a long crawl accumulates blocks without bound.
-    Run a feature-maximal loop (canonicalize + near-dedup + rank
-    priority + cadence compaction) for several generations and assert
-    the persistent-RDD count does not grow with the generation count."""
+    invisible to DataFrame.unpersist and do not free on GC, and operators
+    cache relations the loop cannot reach (link_rank's node and edge
+    caches), so a long crawl accumulates storage without bound unless
+    each generation releases what it made. Run a feature-maximal loop
+    (canonicalize + near-dedup + rank priority + cadence compaction) and
+    assert after EVERY generation: the CacheManager holds no entry the
+    generation made, and the only persistent RDDs the loop added are the
+    live host-rank table's."""
     from incubator_stormcrawler_spark.operators.indexing import IndexTable
 
     site = {
@@ -1171,19 +1182,67 @@ def test_generation_storage_is_bounded_across_generations(spark, tmp_path):
     loop.inject_seeds(
         spark.createDataFrame([("https://h0.example/a",)], ["url"])
     )
-    sc = spark.sparkContext
+    rdds_before = _persistent_rdds(spark)
+    for _ in range(5):
+        entries_before = _cache_entries(spark)
+        loop.run_generation()
+        assert _cache_entries(spark) == entries_before, loop.generation
+        rank_ids = set(loop._ranks_ckpt._ids) if loop._ranks_ckpt else set()
+        assert _persistent_rdds(spark) - rdds_before == rank_ids, (
+            loop.generation
+        )
+    # generations 2-5 ranked hosts: the rank table is really held
+    assert rank_ids
 
-    def n_persistent():
-        return len(sc._jsc.getPersistentRDDs())
 
-    loop.run(2)
-    after2 = n_persistent()
-    loop.run(3)
-    after5 = n_persistent()
-    # steady state: later generations must not stack storage on top of
-    # earlier ones (small constant slack for the live rank table and
-    # any in-flight async unpersists)
-    assert after5 <= after2 + 3, (after2, after5)
+def test_failed_generation_leaves_no_storage(spark, tmp_path):
+    """A generation that raises mid-way (here the index upsert) releases
+    every cache and checkpoint it made, so a retry starts clean; a frame
+    the caller cached lazily BEFORE the generation, which the generation
+    materializes first (forecast_delays under forecast_sizing), stays
+    cached with its blocks."""
+    from incubator_stormcrawler_spark.operators.indexing import IndexTable
+
+    class FailingIndex(IndexTable):
+        def upsert(self, docs):
+            raise RuntimeError("index unavailable")
+
+    site = {
+        "https://h0.example/a":
+            '<html><body>alpha <a href="https://h1.example/b">b</a>'
+            "</body></html>",
+        "https://h1.example/b": "<html><body>beta</body></html>",
+    }
+    delays = spark.createDataFrame(
+        [("h0.example", 0.0)], "key string, crawl_delay_s double"
+    ).cache()
+    loop = CrawlLoop(
+        spark,
+        frontier_path=str(tmp_path / "frontier"),
+        protocol_factory=lambda: MemoryProtocol(site),
+        server_delay=0.0,
+        index=FailingIndex(str(tmp_path / "index")),
+        forecast_sizing=True,
+        forecast_delays=delays,
+    )
+    loop.inject_seeds(
+        spark.createDataFrame([("https://h0.example/a",)], ["url"])
+    )
+    try:
+        entries_before = _cache_entries(spark)
+        rdds_before = _persistent_rdds(spark)
+        with pytest.raises(RuntimeError, match="index unavailable"):
+            loop.run_generation()
+        assert _cache_entries(spark) == entries_before
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+        entry = cache_manager.lookupCachedData(delays._jdf)
+        assert entry.isDefined()
+        builder = entry.get().cachedRepresentation().cacheBuilder()
+        assert builder.isCachedColumnBuffersLoaded()
+        delays_rdd = builder.cachedColumnBuffers().id()
+        assert _persistent_rdds(spark) - {delays_rdd} == rdds_before
+    finally:
+        delays.unpersist(blocking=True)
 
 
 def test_generation_width_follows_fetch_slots_not_shuffle_partitions(
