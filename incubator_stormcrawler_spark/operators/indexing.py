@@ -84,11 +84,7 @@ class _KeyedStore:
         """Commit ``rows`` as the next segment, tagged ``__op`` = 'u'
         (upsert) or 'd' (delete tombstone). Every older segment carries
         forward, unless ``alone`` makes it the only one (compaction)."""
-        seg = max(map(int, self.table.partition_files()), default=0) + 1
-        tagged = rows.withColumn("__op", F.lit(op)).withColumn(
-            "seg", F.lit(seg)
-        )
-        return self.table.commit(tagged, rewrites=None if alone else [seg])
+        return self.table.append(rows.withColumn("__op", F.lit(op)), alone)
 
     def _upsert(self, new: DataFrame) -> int:
         if self.log_structured:

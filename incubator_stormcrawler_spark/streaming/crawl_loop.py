@@ -14,12 +14,14 @@ one batch plan:
     → status updates union                  — this module
     → MERGE into frontier                   — operators/status_merge.py
 
-State between generations is the frontier table, plus the resolved
-redirect map, index and content cache when configured — each a
-``VersionedTable`` (streaming/frontier_table.py: ``v%06d`` snapshots, an
-atomically replaced ``_VERSION`` pointer and a ``_BATCH`` exactly-once
-mark) locally, Delta/Iceberg on a cluster; the MERGE is expressed as a
-plan rewrite here and maps 1:1 onto ``MERGE INTO`` where available.
+State between generations is the frontier table, plus, when
+configured, the resolved redirect map, index, content cache and the
+append-only side stores (host edges, redirect edges, MinHash signatures
+and band keys) — each a ``VersionedTable`` (streaming/frontier_table.py:
+``v%06d`` snapshots, an atomically replaced ``_VERSION`` pointer and a
+``_BATCH`` exactly-once mark) locally, Delta/Iceberg on a cluster; the
+MERGE is expressed as a plan rewrite here and maps 1:1 onto ``MERGE
+INTO`` where available.
 Lineage + an idempotent merge replace Storm's ack/fail at-least-once
 contract.
 
@@ -50,7 +52,7 @@ from ..operators.frontier import frontier_topk
 from ..operators.status_merge import merge_status_updates
 from ..parse.html import parse_pages, split_parse_streams
 from ..protocol.fetch import fetch, politeness_partition
-from .frontier_table import FrontierTable, ResolvedMapStore
+from .frontier_table import FrontierTable, ResolvedMapStore, VersionedTable
 
 # MinHash parameters of the near-dedup signature store: each kept doc
 # stores NEAR_DEDUP_NUM_HASHES signature rows and one band key per
@@ -60,6 +62,10 @@ NEAR_DEDUP_BAND_ROWS = 2
 NEAR_DEDUP_NGRAM = 3
 # power iterations of the host PageRank behind rank_priority
 RANK_ITERATIONS = 3
+# side-store schemas; ``seg`` is the segment VersionedTable.append writes
+EDGE_DDL = "src string, dst string, seg int"
+SIGNATURE_DDL = "doc_id string, h int, v string, seg int"
+BAND_DDL = "doc_id string, b int, bkey string, seg int"
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -110,6 +116,10 @@ class CrawlLoop:
     ):
         self.spark = spark
         self.frontier_path = frontier_path
+
+        def side_store(on: bool, name: str) -> VersionedTable | None:
+            return VersionedTable(frontier_path + name, "seg") if on else None
+
         self.protocol_factory = protocol_factory
         self.filter_chain = filter_chain or URLFilterChain([])
         self.now_fn = now_fn or (lambda gen: f"2024-01-15 {gen:02d}:00:00")
@@ -168,6 +178,7 @@ class CrawlLoop:
         # (urlbuffer/PriorityURLBuffer.java:40). Generation 1 (no edges
         # yet) falls back to the plain urgency-ordered top-k.
         self.rank_priority = rank_priority
+        self._host_edge_store = side_store(rank_priority, "_host_edges")
         self.rank_max_buckets = rank_max_buckets
         # rank_refresh_every > 1 amortizes the per-generation host
         # PageRank (the same staleness trade as bloom_refresh_every, and
@@ -183,7 +194,9 @@ class CrawlLoop:
         # rotating .warc.gz files (the reference's WARCHdfsBolt sitting on
         # the fetcher's output stream: external/warc/.../WARCHdfsBolt);
         # per-generation file prefixes play the role of its time-based
-        # rotation, size rotation is write_warc's own
+        # rotation, size rotation is write_warc's own. At-least-once: a
+        # retried generation archives its fetches again under the same
+        # prefix, as WARCHdfsBolt does on replayed tuples
         self.warc_dir = warc_dir
         # index: an operators.indexing.IndexTable — completes the
         # reference topology's terminal bolt pair: parsed docs UPSERT
@@ -209,6 +222,9 @@ class CrawlLoop:
         # (the source never indexed a doc of its own), so the delete is
         # a harmless no-op for redirected urls.
         self.canonicalize_redirects = canonicalize_redirects
+        self._redirect_edge_store = side_store(
+            canonicalize_redirects, "_redirect_edges"
+        )
         self._resolved_store = (
             ResolvedMapStore(frontier_path + "_redirect_resolved")
             if canonicalize_redirects
@@ -232,6 +248,8 @@ class CrawlLoop:
         # near-dedup; this is the 100 TB training-pipeline requirement
         # layered onto the same loop.
         self.near_dedup = near_dedup
+        self._sig_store = side_store(near_dedup, "_minhash_sigs")
+        self._band_store = side_store(near_dedup, "_minhash_bands")
         self.near_dedup_min_sim = near_dedup_min_sim
         # forecast_sizing=True caps each host's generation share at its
         # politeness-limited fetch forecast (frontier.fetch_forecast):
@@ -265,18 +283,7 @@ class CrawlLoop:
             frontier_path,
             partition_by="bucket" if bucket_partitioned else None,
         )
-        # Durable generation numbering (r7 review fix): a fresh process
-        # resumes the counter from the table's last committed generation
-        # mark, so batch ids stay unique across restarts — without this,
-        # a restarted deployment's NEW generation 1 would collide with
-        # the previous run's committed "gen-1" and the exactly-once guard
-        # would silently DROP its merge. A crash-RETRIED generation, by
-        # contrast, reproduces the SAME number (the failed merge never
-        # moved the mark), which is exactly when the guard should no-op.
-        self.generation = 0
-        last = self.table.last_batch_id()
-        if last and last.startswith("gen-") and last[4:].isdigit():
-            self.generation = int(last[4:])
+        self.generation = self._committed_generation()
         # crawl depth rides as a flat column next to the frontier schema;
         # adaptive mode adds (signature, fetch_interval) for change-driven
         # refetch intervals (AdaptiveScheduler)
@@ -293,11 +300,17 @@ class CrawlLoop:
             return self.spark.createDataFrame([], self.table_ddl)
         return self.table.read(self.spark)
 
-    def _host_edges_path(self) -> str:
-        return self.frontier_path + "_host_edges"
-
-    def _redirect_edges_path(self) -> str:
-        return self.frontier_path + "_redirect_edges"
+    def _committed_generation(self) -> int:
+        """N of the frontier's ``gen-N`` mark (0 before any): the last
+        generation whose merge committed. A fresh process and a failed
+        generation both resume numbering from it, so a restart cannot
+        reuse a committed batch id (the guard would drop its merge), and
+        a generation that failed before its merge commit retries under
+        its own number, ``now`` and WARC prefix; after it, as N + 1."""
+        last = self.table.last_batch_id()
+        if last and last.startswith("gen-") and last[4:].isdigit():
+            return int(last[4:])
+        return 0
 
     # -- redirect side stores (r11 verdict item 4) -------------------------
     # The edge store is FIRST-OBSERVATION-WINS and globally distinct (one
@@ -310,12 +323,6 @@ class CrawlLoop:
     # (external/sql/.../StatusUpdaterBolt.java:103-219).
     def _read_resolved_map(self) -> DataFrame:
         return self._resolved_store.read(self.spark)
-
-    def _minhash_sigs_path(self) -> str:
-        return self.frontier_path + "_minhash_sigs"
-
-    def _minhash_bands_path(self) -> str:
-        return self.frontier_path + "_minhash_bands"
 
     @contextmanager
     def _generation_scope(self):
@@ -386,8 +393,6 @@ class CrawlLoop:
         generation, exactly the cost shape this path exists to avoid;
         a changed page is the rare case and its dup-blind window closes
         when the near-dup itself is kept and stored."""
-        import os
-
         from ..operators.dedup import (
             band_keys,
             incremental_lsh_dedup,
@@ -400,23 +405,10 @@ class CrawlLoop:
         batch_sigs = _ckpt(minhash_signatures(
             batch, NEAR_DEDUP_NUM_HASHES, NEAR_DEDUP_NGRAM
         ))
-        sp = self._minhash_sigs_path()
-        bp = self._minhash_bands_path()
-        if os.path.exists(sp):
-            index_sigs = self.spark.read.parquet(sp)
-            if not os.path.exists(bp):
-                # one-time backfill for a store written before band keys
-                # were persisted (the only store-sized banding groupBy
-                # this path ever runs again)
-                band_keys(
-                    index_sigs, NEAR_DEDUP_BAND_ROWS
-                ).write.mode("overwrite").parquet(bp)
-            index_bands = self.spark.read.parquet(bp)
-        else:
-            index_sigs = self.spark.createDataFrame(
-                [], batch_sigs.schema
-            )
-            index_bands = None
+        index_sigs = self._sig_store.read(
+            self.spark, schema=SIGNATURE_DDL
+        ).drop("seg")
+        index_bands = self._band_store.read(self.spark, schema=BAND_DDL)
         pairs = incremental_lsh_dedup(
             batch,
             index_sigs,
@@ -435,16 +427,15 @@ class CrawlLoop:
         n_dropped = drops.count()
         kept = docs.join(drops, "url", "left_anti")
         # first-observation-wins store append of KEPT docs' signatures
-        kept_sigs = batch_sigs.join(
-            kept.select(F.col("url").alias("doc_id")), "doc_id", "left_semi"
-        )
-        if os.path.exists(sp):
-            kept_sigs = kept_sigs.join(
-                index_sigs.select("doc_id").distinct(),
+        kept_sigs = _ckpt(
+            batch_sigs.join(
+                kept.select(F.col("url").alias("doc_id")),
                 "doc_id",
-                "left_anti",
+                "left_semi",
+            ).join(
+                index_sigs.select("doc_id").distinct(), "doc_id", "left_anti"
             )
-        kept_sigs = _ckpt(kept_sigs)
+        )
         if kept_sigs.count():
             # BANDS FIRST: store membership (the first-wins anti-join)
             # is decided by the SIGNATURE store, so a crash between the
@@ -453,35 +444,33 @@ class CrawlLoop:
             # pairs, which the match's distinct() absorbs. (Sigs-first
             # would strand docs with signatures but no bands: invisible
             # to the band match forever.)
-            band_keys(kept_sigs, NEAR_DEDUP_BAND_ROWS).write.mode(
-                "append"
-            ).parquet(bp)
-            kept_sigs.write.mode("append").parquet(sp)
+            self._band_store.append(
+                band_keys(kept_sigs, NEAR_DEDUP_BAND_ROWS)
+            )
+            self._sig_store.append(kept_sigs)
         return kept, n_dropped
 
     def _compact_edge_stores(self) -> None:
         """File-count hygiene for the append-only side stores, on the
         same cadence as FrontierTable.compact: the stores are already
-        LOGICALLY distinct (anti-join appends), so this only rewrites the
-        accumulated one-file-per-generation fragments into a bounded file
-        count. Content is checkpointed before the overwrite (Spark cannot
-        lazily read a path it is truncating)."""
-        import os
-
-        for path in (
-            self._host_edges_path(),
-            self._redirect_edges_path(),
-            self._minhash_sigs_path(),
-            self._minhash_bands_path(),
+        LOGICALLY distinct (anti-join appends), so this only folds each
+        store's per-generation segments into one segment of a bounded
+        file count. The fold is a replace commit: it writes the next
+        snapshot, never its own input, so a crash leaves the store as it
+        was. A store of one segment is left alone."""
+        for store, ddl in (
+            (self._host_edge_store, EDGE_DDL),
+            (self._redirect_edge_store, EDGE_DDL),
+            (self._sig_store, SIGNATURE_DDL),
+            (self._band_store, BAND_DDL),
         ):
-            if not os.path.exists(path):
-                continue
-            snap = _ckpt(self.spark.read.parquet(path))
-            (
-                snap.repartition(self.compact_max_files_per_bucket)
-                .write.mode("overwrite")
-                .parquet(path)
-            )
+            if store is not None and len(store.partition_files()) > 1:
+                store.append(
+                    store.read(self.spark, schema=ddl).repartition(
+                        self.compact_max_files_per_bucket
+                    ),
+                    alone=True,
+                )
 
     def _host_ranks(self) -> DataFrame | None:
         """PageRank over the host graph observed so far (None before any
@@ -490,12 +479,9 @@ class CrawlLoop:
         rank table feeds the bucket choice as a broadcast, and is
         recomputed every ``rank_refresh_every`` generations (cached as a
         materialized localCheckpoint in between)."""
-        import os
-
         from ..operators.linkrank import _local_checkpoint_tracked, link_rank
 
-        path = self._host_edges_path()
-        if not os.path.exists(path):
+        if not self._host_edge_store.exists():
             return None
         fresh_enough = (
             self._ranks_cache is not None
@@ -503,7 +489,7 @@ class CrawlLoop:
             < self.rank_refresh_every
         )
         if not fresh_enough:
-            edges = self.spark.read.parquet(path)
+            edges = self._host_edge_store.read(self.spark, schema=EDGE_DDL)
             new_cache, new_ckpt = _local_checkpoint_tracked(
                 link_rank(edges, iterations=RANK_ITERATIONS)
             )
@@ -554,10 +540,15 @@ class CrawlLoop:
     # -- one generation ----------------------------------------------------
     def run_generation(self) -> dict:
         """Run one fetch-parse-merge generation in its own generation
-        scope; returns counters."""
+        scope; returns counters. One that raises leaves the counter at
+        the committed mark, as a restarted process would find it."""
         self.generation += 1
-        with self._generation_scope():
-            return self._generate()
+        try:
+            with self._generation_scope():
+                return self._generate()
+        except BaseException:
+            self.generation = self._committed_generation()
+            raise
 
     def _generate(self) -> dict:
         now = self.now_fn(self.generation)
@@ -752,11 +743,8 @@ class CrawlLoop:
             # silently double-weighting them in the host PageRank and
             # growing the store without bound; now the store is globally
             # distinct and a steady-state crawl appends nothing.
-            import os
-
             from ..functions.urls import host_key_expr
 
-            hp = self._host_edges_path()
             gen_host_edges = (
                 outlinks.select(
                     host_key_expr(F.col("source_url")).alias("src"),
@@ -767,14 +755,15 @@ class CrawlLoop:
                     & (F.col("src") != F.col("dst"))
                 )
                 .distinct()
-            )
-            if os.path.exists(hp):
-                gen_host_edges = gen_host_edges.join(
-                    self.spark.read.parquet(hp), ["src", "dst"], "left_anti"
+                .join(
+                    self._host_edge_store.read(self.spark, schema=EDGE_DDL),
+                    ["src", "dst"],
+                    "left_anti",
                 )
+            )
             gen_host_edges = _ckpt(gen_host_edges)
             if gen_host_edges.count():
-                gen_host_edges.write.mode("append").parquet(hp)
+                self._host_edge_store.append(gen_host_edges)
         # xml/other pages report FETCHED (pass-through bolts ack to status)
         xml_status = classified.where(F.col("kind") != "html").select(
             "url", F.lit("FETCHED").alias("status")
@@ -924,8 +913,6 @@ class CrawlLoop:
         if self.index is not None:
             docs_to_index = docs
             if self.canonicalize_redirects:
-                import os
-
                 from ..operators.linkrank import (
                     apply_resolved_map,
                     incremental_redirect_resolve,
@@ -958,17 +945,18 @@ class CrawlLoop:
                 # delta next attempt. (Map-first would strand edges out
                 # of the store forever: the anti-join would see them as
                 # already known.)
-                rp = self._redirect_edges_path()
-                fresh_edges = gen_edges
-                if os.path.exists(rp):
-                    fresh_edges = fresh_edges.join(
-                        self.spark.read.parquet(rp).select("src"),
+                edge_store = self._redirect_edge_store
+                fresh_edges = _ckpt(
+                    gen_edges.join(
+                        edge_store.read(self.spark, schema=EDGE_DDL).select(
+                            "src"
+                        ),
                         "src",
                         "left_anti",
                     )
-                fresh_edges = _ckpt(fresh_edges)
+                )
                 if fresh_edges.count():
-                    fresh_edges.write.mode("append").parquet(rp)
+                    edge_store.append(fresh_edges)
                 # a generation that observed NO hops leaves the map
                 # untouched (the common steady-state case); observed
                 # hops — even pure re-observations — advance it, which
@@ -986,7 +974,7 @@ class CrawlLoop:
                     self._resolved_store.write(
                         new_map, changed=delta_h[0].select("url")
                     )
-                if os.path.exists(rp):
+                if edge_store.exists():
                     from pyspark.sql import Window
 
                     docs_to_index = apply_resolved_map(
@@ -1014,6 +1002,15 @@ class CrawlLoop:
                     docs_to_index
                 )
             self.index.upsert(docs_to_index)
+        compacting = (
+            self.compact_every > 0
+            and self.generation % self.compact_every == 0
+        )
+        if compacting:
+            # delta appends leave one side-store segment per generation;
+            # folding them before the merge commits means a crash in a
+            # fold retries this same generation, which folds them again
+            self._compact_edge_stores()
         if self.index is not None:
             # frontier still holds the PREVIOUS state here; compare after
             # the merge below to find this generation's new ERRORs
@@ -1039,10 +1036,7 @@ class CrawlLoop:
             "index_deleted": n_deleted,
             "near_dups_dropped": n_near_dups,
         }
-        if (
-            self.compact_every > 0
-            and self.generation % self.compact_every == 0
-        ):
+        if compacting:
             if self.bucket_partitioned and self.table.exists():
                 # lakehouse maintenance cadence: bound the table's file
                 # count after the generation's merge has committed
@@ -1053,10 +1047,6 @@ class CrawlLoop:
                     max_files_per_bucket=self.compact_max_files_per_bucket,
                     zorder=self.compact_zorder,
                 )
-            # the host/redirect edge side stores ride the same cadence:
-            # logically distinct already, but delta appends leave one
-            # file batch per new-edge generation
-            self._compact_edge_stores()
             # a log-structured index / content cache folds its delta
             # segments back into one base on the same cadence
             # (per-generation commits are O(batch) appends; this bounds

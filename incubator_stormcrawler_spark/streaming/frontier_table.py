@@ -1,10 +1,11 @@
 """Versioned parquet tables: atomic snapshot commits, one protocol.
 
 Every table the crawl keeps between generations — the frontier, the
-resolved redirect map, the index and the content cache — is a
-:class:`VersionedTable`. The frontier is read and rewritten every
-generation (and concurrently read by monitors), so overwrite-in-place
-races readers. This is the minimal table format that fixes it: each
+resolved redirect map, the index, the content cache and the crawl
+loop's side stores (host edges, redirect edges, MinHash signatures and
+band keys) — is a :class:`VersionedTable`. The frontier is read and
+rewritten every generation (and concurrently read by monitors), so
+overwrite-in-place races readers. This is the minimal table format that fixes it: each
 commit writes a new ``v<NNNNNN>`` snapshot directory, then atomically
 replaces the ``_VERSION`` pointer file; readers resolve the pointer
 first. On a real cluster this maps 1:1 onto Delta/Iceberg (``MERGE
@@ -43,7 +44,8 @@ class VersionedTable:
       current snapshot is hard-linked into the new one — byte-identical
       file reuse, how a real table format carries unmodified files
       forward in its log;
-    - append: carry-forward with one fresh partition value.
+    - append: carry-forward with one fresh partition value — the
+      segment log of :meth:`append`.
 
     Crash contract, single writer: a commit is visible only once the
     pointer flips. A crash before the flip leaves a partial snapshot
@@ -207,6 +209,17 @@ class VersionedTable:
             if old_v <= v + 1 - self.keep:
                 shutil.rmtree(self.snapshot(old_v), ignore_errors=True)
         return v + 1
+
+    def append(self, df: DataFrame, alone: bool = False) -> int:
+        """Commit ``df`` as segment ``partition_by`` = N, one past the
+        largest existing one, carrying every older segment forward. With
+        ``alone`` it is a replace commit: the table becomes that one
+        segment, which is how compaction folds the log."""
+        seg = max(map(int, self.partition_files()), default=0) + 1
+        return self.commit(
+            df.withColumn(self.partition_by, F.lit(seg)),
+            rewrites=None if alone else [seg],
+        )
 
 
 def _distinct_ints(df: DataFrame) -> list[int]:

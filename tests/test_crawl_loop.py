@@ -4,11 +4,18 @@ pattern, core/.../spout/MemorySpout.java:44)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from incubator_stormcrawler_spark.functions.filtering import URLFilterChain
 from incubator_stormcrawler_spark.protocol.fetch import MemoryProtocol
-from incubator_stormcrawler_spark.streaming.crawl_loop import CrawlLoop
+from incubator_stormcrawler_spark.streaming.crawl_loop import (
+    BAND_DDL,
+    EDGE_DDL,
+    SIGNATURE_DDL,
+    CrawlLoop,
+)
 
 
 def build_site(n_hosts: int = 2, pages_per_host: int = 5) -> dict:
@@ -518,6 +525,51 @@ def test_crawl_archives_warc_per_generation(spark, tmp_path):
     assert archived == {(u, body) for u, body in site.items()}
 
 
+def test_failed_generation_retries_under_its_own_number(spark, tmp_path):
+    """A generation that fails before its merge commits keeps its number:
+    the in-process retry, like a restarted process, runs it again as
+    gen-1, with the same batch id and WARC prefix. The archive is
+    at-least-once: both attempts archived the page."""
+    import glob
+
+    from incubator_stormcrawler_spark.operators.indexing import IndexTable
+
+    class FlakyIndex(IndexTable):
+        failures = 1
+
+        def upsert(self, docs):
+            if self.failures:
+                self.failures -= 1
+                raise RuntimeError("index unavailable")
+            return super().upsert(docs)
+
+    site = {"https://h0.example/a": "<html><body>alpha</body></html>"}
+    warc_dir = str(tmp_path / "warcs")
+
+    def make_loop():
+        return CrawlLoop(
+            spark,
+            frontier_path=str(tmp_path / "frontier"),
+            protocol_factory=lambda: MemoryProtocol(site),
+            server_delay=0.0,
+            index=FlakyIndex(str(tmp_path / "index")),
+            warc_dir=warc_dir,
+        )
+
+    loop = make_loop()
+    loop.inject_seeds(
+        spark.createDataFrame([("https://h0.example/a",)], ["url"])
+    )
+    with pytest.raises(RuntimeError, match="index unavailable"):
+        loop.run_generation()
+    assert loop.generation == make_loop().generation == 0
+    assert loop.run_generation()["generation"] == 1
+    assert loop.table.last_batch_id() == "gen-1"
+    names = [f.split("/")[-1] for f in glob.glob(warc_dir + "/*.warc.gz")]
+    assert len(names) == 2
+    assert all(n.startswith("gen-00001-") for n in names), names
+
+
 def test_crawl_indexes_docs_and_applies_deletions(spark, tmp_path):
     """The topology's terminal bolt pair, wired: parsed docs UPSERT into
     the IndexTable every generation (IndexerBolt), and a url that
@@ -861,7 +913,7 @@ def test_redirect_side_stores_stay_distinct_and_match_full_resolve(
         spark.createDataFrame([("https://h0.example/a",)], ["url"])
     )
     loop.run(5)  # a refetches ~every generation: hop a->b re-observed
-    edges = spark.read.parquet(loop._redirect_edges_path())
+    edges = loop._redirect_edge_store.read(spark, schema=EDGE_DDL)
     rows = [(r.src, r.dst) for r in edges.collect()]
     assert len(rows) == len(set(rows)) == 2  # one row per observed hop
     # the map the indexer consumed == full resolve over the store
@@ -957,15 +1009,16 @@ def test_host_edge_store_stays_distinct_across_generations(
     loop.run(5)
     edges = [
         (r.src, r.dst)
-        for r in spark.read.parquet(loop._host_edges_path()).collect()
+        for r in loop._host_edge_store.read(spark, schema=EDGE_DDL).collect()
     ]
     assert len(edges) == len(set(edges)) == 2  # h0<->h1, once each
 
 
 def test_crawl_compacts_edge_stores_on_cadence(spark, tmp_path):
     """compact_every also bounds the side stores' file counts: delta
-    appends leave one file batch per new-edge generation; the cadence
-    rewrite collapses them without changing content."""
+    appends leave one segment per new-edge generation; the cadence folds
+    them into one without changing content, and a store that is already
+    one segment is left alone."""
     import glob
 
     from incubator_stormcrawler_spark.operators.indexing import IndexTable
@@ -992,17 +1045,110 @@ def test_crawl_compacts_edge_stores_on_cadence(spark, tmp_path):
         spark.createDataFrame([("https://h0.example/a",)], ["url"])
     )
     loop.run(4)
-    for path in (loop._redirect_edges_path(), loop._host_edges_path()):
-        files = glob.glob(f"{path}/part-*.parquet")
-        assert 1 <= len(files) <= 1, (path, files)
+    stores = (loop._redirect_edge_store, loop._host_edge_store)
+    for store in stores:
+        files = glob.glob(f"{store.snapshot()}/seg=*/*.parquet")
+        assert 1 <= len(files) <= 1, (store.path, files)
     edges = {
         (r.src, r.dst)
-        for r in spark.read.parquet(loop._redirect_edges_path()).collect()
+        for r in loop._redirect_edge_store.read(
+            spark, schema=EDGE_DDL
+        ).collect()
     }
     assert edges == {
         ("https://h0.example/a", "https://h0.example/b"),
         ("https://h1.example/c", "https://h1.example/d"),
     }
+    # the site is exhausted: the next cadence finds one-segment stores
+    # and commits nothing to them
+    versions = [store.current_version() for store in stores]
+    loop.run(2)
+    assert [store.current_version() for store in stores] == versions
+
+
+def test_side_store_compaction_crash_loses_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """Folding a side store's segments is a replace commit: a crash
+    before its pointer flips leaves every store reading the rows it held
+    before the fold, in the same segments, and the generation, which
+    had not committed its merge, retries under its own number and folds
+    each store to one segment with the same rows."""
+    from incubator_stormcrawler_spark.operators.indexing import IndexTable
+    from incubator_stormcrawler_spark.streaming import frontier_table as ftm
+
+    site = {
+        "https://h0.example/a": (301, "https://h0.example/b"),
+        "https://h1.example/x":
+            '<html><body><a href="https://h2.example/y">y</a></body></html>',
+        "https://h0.example/b":
+            '<html><body><a href="https://h3.example/z">z</a></body></html>',
+        "https://h2.example/y": (301, "https://h2.example/w"),
+    }
+    loop = CrawlLoop(
+        spark,
+        frontier_path=str(tmp_path / "frontier"),
+        protocol_factory=lambda: MemoryProtocol(site),
+        server_delay=0.0,
+        canonicalize_redirects=True,
+        rank_priority=True,
+        index=IndexTable(str(tmp_path / "index")),
+        compact_every=2,
+    )
+    loop.inject_seeds(spark.createDataFrame(
+        [("https://h0.example/a",), ("https://h1.example/x",)], ["url"]
+    ))
+    stores = (loop._host_edge_store, loop._redirect_edge_store)
+    # gen 1 appends one segment to each store, gen 2 a second
+    want = [
+        {("h1.example", "h2.example"), ("h0.example", "h3.example")},
+        {
+            ("https://h0.example/a", "https://h0.example/b"),
+            ("https://h2.example/y", "https://h2.example/w"),
+        },
+    ]
+
+    def state():
+        return [
+            (
+                len(store.partition_files()),
+                {
+                    (r.src, r.dst)
+                    for r in store.read(spark, schema=EDGE_DDL).collect()
+                },
+            )
+            for store in stores
+        ]
+
+    pointers = {store._pointer for store in stores}
+    real_replace, real_compact = os.replace, loop._compact_edge_stores
+    folding = []
+
+    def dying_replace(src, dst):
+        if folding and dst in pointers:
+            raise OSError("simulated crash before pointer flip")
+        return real_replace(src, dst)
+
+    def compact():
+        folding.append(True)
+        try:
+            real_compact()
+        finally:
+            folding.clear()
+
+    monkeypatch.setattr(ftm.os, "replace", dying_replace)
+    monkeypatch.setattr(loop, "_compact_edge_stores", compact)
+    loop.run_generation()
+    with pytest.raises(OSError, match="simulated crash"):
+        loop.run_generation()
+    assert loop.generation == 1
+    assert loop.table.last_batch_id() == "gen-1"
+    assert state() == [(2, rows) for rows in want]
+
+    monkeypatch.setattr(ftm.os, "replace", real_replace)
+    assert loop.run_generation()["generation"] == 2
+    assert loop.table.last_batch_id() == "gen-2"
+    assert state() == [(1, rows) for rows in want]
 
 
 def test_near_dedup_drops_cross_generation_near_duplicate(spark, tmp_path):
@@ -1059,7 +1205,7 @@ def test_near_dedup_drops_cross_generation_near_duplicate(spark, tmp_path):
     # store: kept docs only, one signature set per doc (first-wins)
     from pyspark.sql import functions as F
 
-    sigs = spark.read.parquet(loop._minhash_sigs_path())
+    sigs = loop._sig_store.read(spark, schema=SIGNATURE_DDL)
     per_doc = {
         r["doc_id"]: r["n"]
         for r in sigs.groupBy("doc_id")
@@ -1072,7 +1218,7 @@ def test_near_dedup_drops_cross_generation_near_duplicate(spark, tmp_path):
     # band store rides alongside: same doc set, num_hashes/band_rows
     # band keys per doc — the stored-bands match path never recomputes
     # the store's banding groupBy after generation 1
-    bands = spark.read.parquet(loop._minhash_bands_path())
+    bands = loop._band_store.read(spark, schema=BAND_DDL)
     band_docs = {r.doc_id for r in bands.select("doc_id").distinct().collect()}
     assert band_docs == set(per_doc)
 
@@ -1109,14 +1255,14 @@ def test_near_dedup_reingest_keeps_first_signatures(spark, tmp_path):
     with loop._generation_scope():
         kept, dropped = loop._near_dedup_filter(docs(("urlA", text_v1)))
         assert (kept.count(), dropped) == (1, 0)
-    sigs_v1 = {(r.h, r.v) for r in spark.read.parquet(
-        loop._minhash_sigs_path()).where("doc_id = 'urlA'").collect()}
+    sigs_v1 = {(r.h, r.v) for r in loop._sig_store.read(
+        spark, schema=SIGNATURE_DDL).where("doc_id = 'urlA'").collect()}
     # gen 2: A re-crawled with CHANGED content — kept (no self-match),
     # store signatures unchanged (first-wins)
     with loop._generation_scope():
         kept, dropped = loop._near_dedup_filter(docs(("urlA", text_v2)))
         assert (kept.count(), dropped) == (1, 0)
-    store = spark.read.parquet(loop._minhash_sigs_path())
+    store = loop._sig_store.read(spark, schema=SIGNATURE_DDL)
     assert {(r.h, r.v) for r in store.where("doc_id = 'urlA'").collect()} \
         == sigs_v1
     assert store.groupBy("doc_id").count().where(
