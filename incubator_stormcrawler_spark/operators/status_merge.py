@@ -102,7 +102,6 @@ def merge_status_updates(
     now: str,
     max_fetch_errors: int = 3,
     intervals: dict[str, int] | None = None,
-    assume_small_updates: bool = False,
 ) -> DataFrame:
     """Produce the next-generation frontier (flat schema:
     url/status/next_fetch_date/error_count/key/bucket).
@@ -115,21 +114,11 @@ def merge_status_updates(
       FETCH_ERROR                   → error_count += 1; >= max → ERROR+never
       ERROR                         → terminal, never refetch
 
-    Physical plans, measured at 8M frontier rows × 100k updates on
-    local[32]:
-
-    * default (one full-outer SHUFFLED HASH join, hash built on the
-      deduped updates — the bounded side — frontier streamed unsorted):
-      1.15 s; the previous sort-merge plan measured 1.33 s, the delta
-      being the avoided frontier sort.
-    * ``assume_small_updates=True``: untouched = frontier ANTI updates,
-      touched = updates LEFT frontier-semi — all joins broadcast the
-      deduped update keys, so the frontier is scanned twice but NEVER
-      shuffled or sorted. 3.1 s locally (double scan + broadcast builds),
-      but on a cluster where the frontier is 100 TB on object storage,
-      not shuffling it across the network is the only viable plan — this
-      is what Delta's ``MERGE INTO`` with a small source compiles to
-      (plus file pruning a real table format adds on top).
+    Physical plan: one full-outer SHUFFLED HASH join, hash built on the
+    deduped updates (see the join below). At table scale the frontier
+    side is what ``FrontierTable.merge_commit`` passes in: only the
+    buckets the batch touches, as Delta's ``MERGE INTO`` with a small
+    source prunes files before it joins.
     """
     from ..functions.urls import host_key_expr, bucket_expr
 
@@ -186,7 +175,6 @@ def merge_status_updates(
     # out-of-enum string), so merge results are unchanged on the enum
     # domain; it also tells the planner u's join key side is non-null.
     u = u.where(F.col("u_status").isNotNull())
-    f = frontier
 
     def merged_cols(j: DataFrame) -> DataFrame:
         fs, us = F.col("status"), F.col("u_status")
@@ -269,33 +257,15 @@ def merge_status_updates(
         cols.extend(F.col(c) for c in passthrough)
         return j.select(*cols)
 
-    if not assume_small_updates:
-        # Full-outer as a SHUFFLED HASH join with the build side on the
-        # deduped updates: a generation's update batch is bounded (its own
-        # emissions) while the frontier is not, so hashing the bounded side
-        # and STREAMING the frontier partition avoids sorting the frontier
-        # entirely — the sort is the dominant cost of the default
-        # sort-merge plan at table scale (measured 1.33→1.15 s at 8 M rows
-        # locally; the avoided frontier sort is the point at 100 TB).
-        return merged_cols(
-            f.join(u.hint("SHUFFLE_HASH"), on="url", how="full_outer")
-        )
-
-    u_keys = u.select("url")
-    untouched = f.join(F.broadcast(u_keys), "url", "left_anti")
-    f_matched = f.join(F.broadcast(u_keys), "url", "left_semi")
-    # f_matched is ROW-bounded by the update batch (≤ |u| rows) but NOT
-    # byte-bounded: it carries full frontier-width rows (every passthrough
-    # column), so a forced broadcast hard-fails/OOMs the driver on a wide
-    # or large batch where the previous unhinted form degraded to a
-    # shuffle join (r13 advice). Only the url KEYS are author-proven
-    # broadcastable (the anti/semi legs above); this wide join is left to
-    # AQE, which broadcasts from the MEASURED size when it actually fits.
-    j = u.join(f_matched, on="url", how="left")
-    merged = merged_cols(j)
-    # Project untouched rows through the merged column list so both legs
-    # union cleanly even when the frontier carries columns updates lack.
-    return untouched.select(*merged.columns).unionByName(merged)
+    # Full-outer as a SHUFFLED HASH join with the build side on the
+    # deduped updates: a generation's update batch is bounded (its own
+    # emissions) while the frontier is not, so hashing the bounded side
+    # and STREAMING the frontier partition avoids sorting the frontier
+    # entirely — the sort is the dominant cost of the default sort-merge
+    # plan at table scale (measured 1.33→1.15 s at 8 M rows locally).
+    return merged_cols(
+        frontier.join(u.hint("SHUFFLE_HASH"), on="url", how="full_outer")
+    )
 
 
 def deletion_stream(merged: DataFrame, previous: DataFrame) -> DataFrame:

@@ -33,10 +33,15 @@ those). It keeps what existed before, including a caller's lazily cached
 frame the generation first materializes, and the host-rank table, held
 across generations on purpose. A failed generation's retry starts clean.
 
-At 100 TB: write the frontier partitioned by ``bucket`` and run
-generations per bucket-shard (frontier_topk's ``bucket`` arg) — each
-generation then scans one shard's files only, and multiple shards can
-crawl concurrently without overlapping politeness keys.
+The frontier is stored partitioned by ``bucket`` (the reference's
+``hash(key) % maxNumBuckets`` column, external/sql/.../
+StatusUpdaterBolt.java:157-163). Its first commit replaces the empty
+table; every later one is ``FrontierTable.merge_commit``, which reads
+and rewrites only the buckets a generation's updates touch — the Delta
+``MERGE INTO`` plan shape. At 100 TB, generations can also run per
+bucket-shard (frontier_topk's ``bucket`` arg): each then scans one
+shard's files only, and shards crawl concurrently without overlapping
+politeness keys.
 """
 
 from __future__ import annotations
@@ -94,7 +99,7 @@ class CrawlLoop:
         content_cache=None,
         metrics_path: str | None = None,
         fetch_threads: int = 1,
-        bucket_partitioned: bool = False,
+        bucket_partitioned: bool = True,
         bloom_prefilter: bool = False,
         bloom_m_bits: int = 1 << 20,
         bloom_refresh_every: int = 1,
@@ -111,9 +116,15 @@ class CrawlLoop:
         forecast_horizon_s: float = 60.0,
         forecast_delays: DataFrame | None = None,
         compact_every: int = 0,
-        compact_zorder: bool = False,
         compact_max_files_per_bucket: int = 4,
     ):
+        # the frontier is always bucket-partitioned; the keyword stays
+        # for callers written against the former unpartitioned default
+        if bucket_partitioned is not True:
+            raise ValueError(
+                "bucket_partitioned: the unpartitioned frontier layout is"
+                " gone; the frontier is always partitioned by bucket"
+            )
         self.spark = spark
         self.frontier_path = frontier_path
 
@@ -135,11 +146,6 @@ class CrawlLoop:
         self.content_cache = content_cache
         self.metrics_path = metrics_path
         self.fetch_threads = fetch_threads
-        # bucket_partitioned=True stores hive-partitioned snapshots and
-        # merges incrementally (FrontierTable.merge_commit): only buckets
-        # touched by a generation's updates are re-read and rewritten —
-        # the Delta MERGE INTO plan shape, mandatory at 100 TB
-        self.bucket_partitioned = bucket_partitioned
         # bloom_prefilter=True drops already-known urls from the
         # DISCOVERED stream BEFORE the merge via the zero-seen-shuffle
         # Bloom membership (dedup.bloom_unseen_broadcast with
@@ -273,16 +279,9 @@ class CrawlLoop:
         # shuffle-partitions files per generation, and without a cadence
         # a long crawl's file count grows without bound (the lakehouse
         # maintenance loop every Delta/Iceberg deployment schedules).
-        # compact_zorder=True makes the rewrite OPTIMIZE ZORDER —
-        # clustered on (next_fetch_date, key hash) so frontier due scans
-        # skip files by footer stats (see FrontierTable.compact).
         self.compact_every = compact_every
-        self.compact_zorder = compact_zorder
         self.compact_max_files_per_bucket = compact_max_files_per_bucket
-        self.table = FrontierTable(
-            frontier_path,
-            partition_by="bucket" if bucket_partitioned else None,
-        )
+        self.table = FrontierTable(frontier_path, partition_by="bucket")
         self.generation = self._committed_generation()
         # crawl depth rides as a flat column next to the frontier schema;
         # adaptive mode adds (signature, fetch_interval) for change-driven
@@ -520,13 +519,14 @@ class CrawlLoop:
         self, updates: DataFrame, now: str, batch_id: str | None = None
     ) -> DataFrame:
         """Merge one batch of status updates into the frontier and commit;
-        returns the committed table. Incremental (partition-pruned) when
-        bucket-partitioned and a snapshot already exists. A batch_id makes
-        a crash-retried merge a no-op instead of a double-apply — the
-        table's exactly-once contract, on both paths. Seed injection
-        passes None (it may run several times per generation, and
-        DISCOVERED-merge is idempotent by its own semantics)."""
-        if self.bucket_partitioned and self.table.exists():
+        returns the committed table. The first commit creates the table
+        (with ``table_ddl``'s columns); every later one is the
+        partition-pruned ``merge_commit``. A batch_id makes a
+        crash-retried merge a no-op instead of a double-apply — the
+        table's exactly-once contract. Seed injection passes None (it may
+        run several times per generation, and DISCOVERED-merge is
+        idempotent by its own semantics)."""
+        if self.table.exists():
             self.table.merge_commit(
                 self.spark, updates, now, batch_id=batch_id
             )
@@ -659,14 +659,6 @@ class CrawlLoop:
                 )
             )
         fetched = fetched.cache()
-        if self.content_cache is not None:
-            # store fresh fetches for future generations
-            fresh = fetched.where(
-                (F.col("status") == "FETCHED") & F.col("content").isNotNull()
-            ).select("url", "content")
-            if hits is not None:
-                fresh = fresh.join(hits.select("url"), "url", "left_anti")
-            self.content_cache.store(fresh, stored_at=now)
 
         pages = fetched.where(F.col("status") == "FETCHED").select(
             "url", "content"
@@ -907,6 +899,14 @@ class CrawlLoop:
         # 5 counting actions BEFORE the merge and re-executed the top-k,
         # outlink and filter plans up to 3× each — the 537 p/s regression).
         fetched_ok = pages.count()
+        if self.content_cache is not None and fetched_ok > cache_hits:
+            # store fresh fetches for future generations; a generation
+            # that fetched nothing new commits no cache version
+            fresh = fetched.where(
+                (F.col("status") == "FETCHED") & F.col("content").isNotNull()
+            ).select("url", "content")
+            fresh = fresh.join(hits.select("url"), "url", "left_anti")
+            self.content_cache.store(fresh, stored_at=now)
         n_docs = docs.count()
         n_deleted = 0
         n_near_dups = 0
@@ -997,11 +997,13 @@ class CrawlLoop:
                         .where(F.col("__rn") == 1)
                         .drop("__rn")
                     )
-            if self.near_dedup:
-                docs_to_index, n_near_dups = self._near_dedup_filter(
-                    docs_to_index
-                )
-            self.index.upsert(docs_to_index)
+            # a generation that parsed no doc commits no index version
+            if n_docs:
+                if self.near_dedup:
+                    docs_to_index, n_near_dups = self._near_dedup_filter(
+                        docs_to_index
+                    )
+                self.index.upsert(docs_to_index)
         compacting = (
             self.compact_every > 0
             and self.generation % self.compact_every == 0
@@ -1037,16 +1039,13 @@ class CrawlLoop:
             "near_dups_dropped": n_near_dups,
         }
         if compacting:
-            if self.bucket_partitioned and self.table.exists():
-                # lakehouse maintenance cadence: bound the table's file
-                # count after the generation's merge has committed
-                # (content is untouched; the exactly-once mark carries
-                # forward)
-                self.table.compact(
-                    self.spark,
-                    max_files_per_bucket=self.compact_max_files_per_bucket,
-                    zorder=self.compact_zorder,
-                )
+            # lakehouse maintenance cadence: bound the table's file count
+            # after the generation's merge has committed (content is
+            # untouched; the exactly-once mark carries forward)
+            self.table.compact(
+                self.spark,
+                max_files_per_bucket=self.compact_max_files_per_bucket,
+            )
             # a log-structured index / content cache folds its delta
             # segments back into one base on the same cadence
             # (per-generation commits are O(batch) appends; this bounds

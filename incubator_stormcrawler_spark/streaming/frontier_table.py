@@ -161,7 +161,10 @@ class VersionedTable:
         1. A ``batch_id`` equal to the current mark is a replay: return
            without writing.
         2. Write ``df`` into the next snapshot (skipped when ``rewrites``
-           is empty).
+           is empty). A carry-forward commit over a snapshot holding
+           parquet files outside partition directories (written without
+           ``partition_by``) raises first: step 3 links partitions only,
+           so those rows would be lost.
         3. Hard-link every partition of the current snapshot that
            ``rewrites`` does not name (``None`` replaces everything).
         4. Write the mark: ``batch_id``, or the previous mark carried
@@ -174,6 +177,14 @@ class VersionedTable:
         if batch_id is not None and batch_id == mark:
             return v
         old, new = self.snapshot(v), self.snapshot(v + 1)
+        if rewrites is not None and os.path.isdir(old) and any(
+            name.endswith(".parquet") for name in os.listdir(old)
+        ):
+            raise ValueError(
+                f"{old} holds parquet files outside {self.partition_by}="
+                " partitions; a carry-forward commit would drop them —"
+                " convert it with a replace commit first (MIGRATION.md)"
+            )
         # leftovers of a crashed attempt are in no reader's lineage
         shutil.rmtree(new, ignore_errors=True)
         if rewrites is None or len(rewrites):
@@ -260,7 +271,6 @@ class FrontierTable(VersionedTable):
         updates: DataFrame,
         now: str,
         batch_id: str | None = None,
-        **merge_kwargs,
     ) -> int:
         """Delta-``MERGE INTO``-shaped incremental commit: rewrite ONLY the
         bucket partitions the update batch touches; every untouched
@@ -297,7 +307,7 @@ class FrontierTable(VersionedTable):
             updates.select(bucket_expr(host_key_expr(F.col("url"))))
         )
         pruned = self.read(spark).where(F.col("bucket").isin(touched))
-        merged = merge_status_updates(pruned, updates, now, **merge_kwargs)
+        merged = merge_status_updates(pruned, updates, now)
         return super().commit(merged, rewrites=touched, batch_id=batch_id)
 
     def compact(
@@ -307,7 +317,6 @@ class FrontierTable(VersionedTable):
         zorder: bool = False,
         zorder_files_per_bucket: int = 4,
         zorder_bits: int = 10,
-        curve: str = "morton",
     ) -> int:
         """OPTIMIZE (small-file compaction) for the bucket-partitioned
         table — the operational primitive every incremental lakehouse
@@ -346,34 +355,11 @@ class FrontierTable(VersionedTable):
         ``max(max_files_per_bucket, 2 * zorder_files_per_bucket)`` so
         the clustered layout is a fixed point (re-running compact is a
         no-op) — the OPTIMIZE idiom: trigger on accumulated small
-        files, not on exact counts.
-
-        ``curve="hilbert"`` swaps the Morton interleave for the 2-D FSM
-        Hilbert key (operators.layout.hilbert_key). Honest guidance,
-        measured (tests/test_streaming.py::
-        test_compact_hilbert_curve_clusters_and_prunes): for THIS
-        table's single hot predicate — the due scan — Morton with the
-        date axis on the top interleave bit prunes MORE files (~68% vs
-        ~45% for a quartile cutoff) because files split by due time
-        first, so Morton stays the default. Hilbert's tighter-footer
-        advantage (1.7x bbox, SCALING.json `hilbert_rewrite`) pays off
-        when scans hit BOTH axes comparably — pick it for workloads
-        that range over host hash as much as due time."""
+        files, not on exact counts. The curve is Morton with the date
+        axis on the top interleave bit, so files split by due time
+        first: the due scan is this table's one hot predicate."""
         if self.partition_by != "bucket":
             raise ValueError("compact requires partition_by='bucket'")
-        # validate curve UNCONDITIONALLY (r10 ADVICE: a typo'd curve, or
-        # curve="hilbert" with zorder=False, used to be silently ignored
-        # — the caller believed they configured clustering and got none)
-        if curve not in ("morton", "hilbert"):
-            raise ValueError(
-                f"compact: unknown curve {curve!r}"
-                " (expected 'morton' or 'hilbert')"
-            )
-        if curve != "morton" and not zorder:
-            raise ValueError(
-                f"compact: curve={curve!r} has no effect with zorder=False"
-                " — pass zorder=True to cluster, or drop the curve"
-            )
         threshold = (
             max(max_files_per_bucket, 2 * zorder_files_per_bucket)
             if zorder
@@ -407,18 +393,8 @@ class FrontierTable(VersionedTable):
             # column order matters: zorder_key gives the LAST column the
             # higher bit of each interleave pair, and the due scan is the
             # hot predicate — put the date axis there so the top zkey bit
-            # splits by due time first (hilbert splits both axes at every
-            # level, so for it the order only reflects the curve)
-            if curve == "hilbert":
-                from ..operators.layout import hilbert_key
-
-                keyed = hilbert_key(
-                    aug, ["__z_kh", "__z_nfd"], bits=zorder_bits
-                ).withColumnRenamed("hkey", "zkey")
-            else:  # "morton" — curve validated at entry
-                keyed = zorder_key(
-                    aug, ["__z_kh", "__z_nfd"], bits=zorder_bits
-                )
+            # splits by due time first
+            keyed = zorder_key(aug, ["__z_kh", "__z_nfd"], bits=zorder_bits)
             # range-partition on (bucket, zkey): each task holds one
             # contiguous zkey slice of one bucket (row-count balanced by
             # the range sampler — hot buckets get more files), and the

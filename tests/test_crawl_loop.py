@@ -9,6 +9,9 @@ import os
 import pytest
 
 from incubator_stormcrawler_spark.functions.filtering import URLFilterChain
+from incubator_stormcrawler_spark.operators.status_merge import (
+    merge_status_updates,
+)
 from incubator_stormcrawler_spark.protocol.fetch import MemoryProtocol
 from incubator_stormcrawler_spark.streaming.crawl_loop import (
     BAND_DDL,
@@ -329,34 +332,118 @@ def test_status_metrics_table(spark, tmp_path):
     assert rows[(2, "FETCHED")] == 1
 
 
-def test_bucket_partitioned_loop_matches_default(spark, tmp_path):
-    """The incremental bucket-partitioned merge path (FrontierTable.
-    merge_commit wired into the loop) must converge to the same frontier
-    as the default full-rewrite path."""
+def test_default_loop_frontier_is_bucket_partitioned(spark, tmp_path):
+    """A loop built with no layout option keeps its frontier partitioned
+    by bucket: the first commit creates the table, every later one is the
+    pruned merge_commit, and the closed graph is still fully discovered.
+    (Pruned merge = full merge is pinned by tests/test_streaming.py::
+    test_merge_commit_rewrites_only_touched_buckets.)"""
+    import glob
+
     site = build_site(3, 4)
+    loop = CrawlLoop(
+        spark,
+        frontier_path=str(tmp_path / "frontier"),
+        protocol_factory=lambda: MemoryProtocol(site),
+        server_delay=0.0,
+    )
+    loop.inject_seeds(
+        spark.createDataFrame([("https://h0.example/p0",)], ["url"])
+    )
+    loop.run(3)
+    assert len(loop.read_frontier().collect()) == len(site)
+    snap = loop.table.snapshot()
+    files = glob.glob(f"{snap}/**/*.parquet", recursive=True)
+    assert files
+    assert all(
+        os.path.basename(os.path.dirname(f)).startswith("bucket=")
+        and os.path.dirname(os.path.dirname(f)) == snap
+        for f in files
+    ), files
 
-    def run(path, **kw):
-        loop = CrawlLoop(
-            spark,
-            frontier_path=str(tmp_path / path),
-            protocol_factory=lambda: MemoryProtocol(site),
-            server_delay=0.0,
-            **kw,
-        )
-        loop.inject_seeds(
-            spark.createDataFrame([("https://h0.example/p0",)], ["url"])
-        )
-        loop.run(3)
-        return sorted(
-            (r.url, r.status, str(r.next_fetch_date), r.error_count,
-             r.key, r.bucket, r.depth)
-            for r in loop.read_frontier().collect()
-        )
 
-    default = run("f_default")
-    partitioned = run("f_bucketed", bucket_partitioned=True)
-    assert partitioned == default
-    assert len(default) == len(site)  # closed graph fully discovered
+def test_carry_forward_over_unpartitioned_frontier_raises(spark, tmp_path):
+    """A frontier written without partitions (the layout of the former
+    default loop) holds its parquet files at the snapshot root. A
+    carry-forward commit links partition directories only, so the
+    partitioned merge into it used to drop those rows silently: it kept
+    only the rows of the buckets a generation touched (1 of these 6
+    after one generation capped at one URL). It now raises before
+    writing, and the table is unchanged."""
+    from incubator_stormcrawler_spark.streaming.frontier_table import (
+        FrontierTable,
+    )
+
+    path = str(tmp_path / "frontier")
+    site = {
+        f"https://h{i}.example/p0": f"<html><body>{i}</body></html>"
+        for i in range(6)
+    }
+    loop = CrawlLoop(
+        spark,
+        frontier_path=path,
+        protocol_factory=lambda: MemoryProtocol(site),
+        server_delay=0.0,
+        max_results=1,
+    )
+    # the unpartitioned layout, as the former default loop committed it
+    FrontierTable(path).commit(
+        merge_status_updates(
+            loop.read_frontier(),
+            spark.createDataFrame([(u, "DISCOVERED", 0) for u in site],
+                                  "url string, status string, depth int"),
+            loop.now_fn(0),
+        )
+    )
+    version = loop.table.current_version()
+    before = sorted(tuple(r) for r in loop.read_frontier().collect())
+    assert len(before) == 6
+
+    with pytest.raises(ValueError, match="outside bucket= partitions"):
+        loop.run_generation()
+    assert loop.table.current_version() == version
+    assert sorted(tuple(r) for r in loop.read_frontier().collect()) == before
+    # MIGRATION.md's conversion: one replace commit into the partitioned
+    # layout, after which the loop merges without losing a row
+    loop.table.commit(FrontierTable(path).read(spark))
+    assert loop.run_generation()["fetched_ok"] == 1
+    assert loop.read_frontier().count() == 6
+
+
+def test_generation_with_nothing_new_commits_no_index_or_cache_version(
+    spark, tmp_path
+):
+    """A generation that parsed no doc and fetched nothing beyond the
+    cache commits no index version and no content-cache version."""
+    from incubator_stormcrawler_spark.operators.indexing import (
+        ContentCache,
+        IndexTable,
+    )
+
+    site = {"https://h0.example/p0": "<html><body>zero</body></html>"}
+    index = IndexTable(str(tmp_path / "index"), log_structured=True)
+    cache = ContentCache(str(tmp_path / "cache"), log_structured=True)
+    loop = CrawlLoop(
+        spark,
+        frontier_path=str(tmp_path / "frontier"),
+        protocol_factory=lambda: MemoryProtocol(site),
+        server_delay=0.0,
+        index=index,
+        content_cache=cache,
+    )
+    loop.inject_seeds(
+        spark.createDataFrame([("https://h0.example/p0",)], ["url"])
+    )
+    first = loop.run_generation()
+    assert (first["fetched_ok"], first["docs"]) == (1, 1)
+    versions = (index.table.current_version(), cache.table.current_version())
+    assert versions == (1, 1)
+    # p0 is next due a day later: nothing to fetch this generation
+    second = loop.run_generation()
+    assert (second["batch"], second["fetched_ok"], second["docs"]) == (0, 0, 0)
+    assert (
+        index.table.current_version(), cache.table.current_version()
+    ) == versions
 
 
 def test_compact_cadence_bounds_file_counts_across_generations(
@@ -379,7 +466,6 @@ def test_compact_cadence_bounds_file_counts_across_generations(
             frontier_path=str(tmp_path / path),
             protocol_factory=lambda: MemoryProtocol(site),
             server_delay=0.0,
-            bucket_partitioned=True,
             **kw,
         )
         loop.inject_seeds(
@@ -452,7 +538,6 @@ def test_bloom_prefilter_crawl_equivalence(spark, tmp_path):
             server_delay=0.0,
             max_per_bucket=50,
             max_results=200,
-            bucket_partitioned=True,
             **kw,
         )
         seeds = spark.createDataFrame([("https://h0.example/p0",)], ["url"])
@@ -1422,7 +1507,6 @@ def test_generation_width_follows_fetch_slots_not_shuffle_partitions(
                 frontier_path=str(tmp_path / f"frontier{width}"),
                 protocol_factory=lambda: MemoryProtocol(site),
                 server_delay=0.0,
-                bucket_partitioned=True,
             )
             loop.inject_seeds(spark.createDataFrame(
                 [(u,) for u in site if u.endswith("/p0")], ["url"]

@@ -143,46 +143,6 @@ def test_round6_tpch_plan_shapes(spark):
     assert "CartesianProduct" not in fp
 
 
-def test_broadcast_merge_never_shuffles_frontier(spark, tmp_path):
-    from incubator_stormcrawler_spark.operators.status_merge import (
-        merge_status_updates,
-    )
-
-    frontier_path = str(tmp_path / "f")
-    spark.range(1000).selectExpr(
-        "'https://h' || cast(id % 10 as string) || '.com/p' || cast(id as string) as url",
-        "'DISCOVERED' as status",
-        "timestamp'2024-01-01 00:00:00' as next_fetch_date",
-        "0 as error_count",
-        "'h' || cast(id % 10 as string) || '.com' as key",
-        "cast(id % 10 as int) as bucket",
-    ).write.mode("overwrite").parquet(frontier_path)
-    frontier = spark.read.parquet(frontier_path)
-    updates = spark.range(50).selectExpr(
-        "'https://h1.com/p' || cast(id as string) as url",
-        "'FETCHED' as status",
-    )
-    merged = merge_status_updates(
-        frontier, updates, "2024-01-02 00:00:00", assume_small_updates=True
-    )
-    plan = plan_of(merged)
-    # The FULL frontier enters only key-broadcast joins (anti + semi), so
-    # every hashpartitioning Exchange carries an update-batch-BOUNDED side
-    # (the dedupe, or the ≤|u|-row matched slice feeding the wide join —
-    # no longer force-broadcast since the r13 advice: full-width frontier
-    # rows are not author-proven byte-bounded, AQE decides from measured
-    # size). All exchanges key on url.
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "url#" in line  # update-bounded sides only
-    assert plan.count("BroadcastHashJoin") >= 2  # the key anti + semi legs
-    # executed plan: AQE measures the matched slice (tiny here) and
-    # installs the broadcast at runtime — the frontier is never sorted
-    fp = final_plan_of(merged)
-    assert fp.count("BroadcastHashJoin") >= 3
-    assert "SortMergeJoin" not in fp
-
-
 def test_full_outer_merge_is_single_join(spark):
     from incubator_stormcrawler_spark.operators import synthetic as syn
     from incubator_stormcrawler_spark.operators.status_merge import (

@@ -661,97 +661,6 @@ def test_compact_zorder_clusters_buckets_and_real_footers_prune(
     assert table.compact(spark, zorder=True, zorder_files_per_bucket=16) == v2
 
 
-def test_compact_validates_curve_unconditionally(spark, tmp_path):
-    """r10 ADVICE: compact() used to read `curve` only inside the
-    zorder=True branch, so a typo'd name — or a deliberate
-    curve="hilbert" with zorder=False — was silently ignored and the
-    caller got NO clustering and NO error. Both now raise at entry,
-    before any listing or data work."""
-    from incubator_stormcrawler_spark.streaming.frontier_table import (
-        FrontierTable,
-    )
-
-    table = FrontierTable(str(tmp_path / "t"), partition_by="bucket")
-    with pytest.raises(ValueError, match="unknown curve"):
-        table.compact(spark, zorder=False, curve="hilbrt")
-    with pytest.raises(ValueError, match="unknown curve"):
-        table.compact(spark, zorder=True, curve="zorder")
-    with pytest.raises(ValueError, match="no effect with zorder=False"):
-        table.compact(spark, zorder=False, curve="hilbert")
-
-
-def test_compact_hilbert_curve_clusters_and_prunes(spark, tmp_path):
-    """compact(zorder=True, curve="hilbert"): the FSM Hilbert key in
-    place of the Morton interleave. Same correctness contract checked
-    against REAL footers: content bit-identical, the batch mark carries,
-    fixed point on a re-run, unknown curve name raises. The pruning
-    expectation is DELIBERATELY weaker than the Morton test's strict
-    majority — an honest negative, measured: for the frontier's single
-    hot predicate (the due scan) the Morton layout puts the date axis on
-    the top interleave bit so files split by due time FIRST (68% of
-    files pruned here), while Hilbert splits both axes at every level
-    and a quartile cutoff prunes ~45%. Hilbert's tighter-footer
-    advantage (SCALING.json hilbert_rewrite, 1.7x bbox) pays off for
-    MULTI-predicate scans over both axes, not for a one-axis workload
-    with a purpose-built bit order — which is why Morton stays this
-    table's default. Asserted: well above the fragmented baseline
-    (<30%), at the measured Hilbert band (>38%)."""
-    import datetime
-    import glob
-
-    import pyarrow.parquet as pq
-    import pytest
-
-    from incubator_stormcrawler_spark.operators.synthetic import (
-        synthetic_frontier,
-    )
-
-    NOW = "2024-01-15 00:00:00"
-    table = FrontierTable(str(tmp_path / "fh"), partition_by="bucket")
-    frontier = synthetic_frontier(spark, "/root/testdata/sf0.001")
-    table.commit(frontier.repartition(40))
-    updates = spark.createDataFrame(
-        [("https://host1.example/p101", "FETCHED")],
-        "url string, status string",
-    )
-    table.merge_commit(spark, updates, NOW, batch_id="gen-h")
-    v = table.current_version()
-    before_rows = {tuple(r) for r in table.read(spark).collect()}
-
-    with pytest.raises(ValueError):
-        table.compact(spark, zorder=True, curve="peano")
-
-    v2 = table.compact(
-        spark, zorder=True, zorder_files_per_bucket=16, curve="hilbert"
-    )
-    assert v2 == v + 1
-    snap2 = os.path.join(table.path, f"v{v2:06d}")
-    cutoff = datetime.datetime(
-        2024, 1, 11, 0, 0, 0, tzinfo=datetime.timezone.utc
-    )
-    pruned = total = 0
-    for f in glob.glob(f"{snap2}/bucket=*/*.parquet"):
-        meta = pq.ParquetFile(f).metadata
-        names = [meta.schema.column(i).name
-                 for i in range(meta.num_columns)]
-        ci = names.index("next_fetch_date")
-        mn = min(meta.row_group(rg).column(ci).statistics.min
-                 for rg in range(meta.num_row_groups))
-        total += 1
-        if mn > cutoff:
-            pruned += 1
-    # honest band: above the fragmented baseline, below Morton's
-    # date-top-bit layout (see docstring)
-    assert pruned > (total * 38) // 100, (pruned, total)
-
-    after_rows = {tuple(r) for r in table.read(spark).collect()}
-    assert after_rows == before_rows
-    assert table.last_batch_id() == "gen-h"
-    assert table.compact(
-        spark, zorder=True, zorder_files_per_bucket=16, curve="hilbert"
-    ) == v2
-
-
 def _bucket_inodes(snap_path: str) -> dict[int, set]:
     out: dict[int, set] = {}
     for name in os.listdir(snap_path):

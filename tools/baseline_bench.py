@@ -335,7 +335,6 @@ def bench_recursive_crawl(
             max_per_bucket=n_pages,
             max_results=n_pages,
             adaptive=adaptive,
-            bucket_partitioned=True,
             bloom_prefilter=bloom_prefilter,
             # rank_priority with max_buckets=hosts keeps coverage
             # identical (every due host still crawls) while exercising
