@@ -70,18 +70,7 @@ def build_crawl_loop(
         fetch_threads=int(conf.get("fetcher.threads.number", 1)),
         max_depth=(int(conf["max.depth"]) if "max.depth" in conf else None),
         adaptive=bool(conf.get("scheduler.adaptive", False)),
-        # scale/topology knobs (round 8): the Bloom discovery prefilter
-        # (the reference's per-JVM seen caches,
-        # AbstractQueryingSpout.java:149-175), WARC archiving of fetched
-        # pages (WARCHdfsBolt), and OPIC-style rank-prioritized bucket
-        # choice (PriorityURLBuffer analog)
-        bloom_prefilter=bool(conf.get("frontier.bloom.prefilter", False)),
-        bloom_m_bits=int(conf.get("frontier.bloom.m.bits", 1 << 20)),
-        bloom_refresh_every=int(conf.get("frontier.bloom.refresh.every", 1)),
-        # r9: shard the prefilter bitmap into N lazy broadcasts (the
-        # 10^9-url form); 1 = the single-array path
-        bloom_n_shards=int(conf.get("frontier.bloom.n.shards", 1)),
-        # r9: politeness-limited generation sizing (fetch_forecast cap)
+        # politeness-limited generation sizing (fetch_forecast cap)
         forecast_sizing=bool(conf.get("frontier.forecast.sizing", False)),
         forecast_horizon_s=float(
             conf.get("frontier.forecast.horizon.sec", 60.0)
@@ -89,6 +78,8 @@ def build_crawl_loop(
         # r10: lakehouse maintenance cadence — OPTIMIZE every N
         # generations on the bucketed table
         compact_every=int(conf.get("frontier.compact.every", 0)),
+        # WARC archiving of fetched pages (WARCHdfsBolt) and OPIC-style
+        # rank-prioritized bucket choice (PriorityURLBuffer analog)
         warc_dir=conf.get("warc.dir"),
         rank_priority=bool(conf.get("spout.rank.priority", False)),
         rank_max_buckets=int(conf.get("spout.rank.max.buckets", 10)),

@@ -1416,8 +1416,8 @@ def bloom_unseen_broadcast_sharded(
 
     Broadcast lifecycle: REPEATED callers (e.g. once per crawl
     generation) should pass prebuilt ``Broadcast`` objects in
-    ``bitmap_arrays`` and own their destroy (CrawlLoop does exactly
-    this, destroying on refresh). When this function has to create
+    ``bitmap_arrays`` and own their destroy, e.g. on each bitmap
+    refresh. When this function has to create
     broadcasts itself — ``bitmap_arrays=None`` or raw numpy arrays — it
     EAGERLY materializes the probe checkpoint and then ``unpersist()``s
     them (driver copy retained for fault re-fetch), so standalone
@@ -1540,8 +1540,8 @@ def bloom_unseen_broadcast(
     after the build misclassifies those keys as definitely-unseen —
     Bloom bits only guarantee no-false-negative for keys that were fed
     in. A stale bitmap is therefore safe only where a downstream
-    idempotent consumer absorbs the extras (the crawl loop's
-    insert-if-absent merge), or where ``seen`` only shrinks (removals
+    idempotent consumer absorbs the extras (an insert-if-absent
+    merge such as the frontier's), or where ``seen`` only shrinks (removals
     just cost residue). Rebuild on additions otherwise.
 
     ``broadcast_residue=True`` replaces the residue LEFT ANTI (which

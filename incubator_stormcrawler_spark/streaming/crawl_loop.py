@@ -100,10 +100,6 @@ class CrawlLoop:
         metrics_path: str | None = None,
         fetch_threads: int = 1,
         bucket_partitioned: bool = True,
-        bloom_prefilter: bool = False,
-        bloom_m_bits: int = 1 << 20,
-        bloom_refresh_every: int = 1,
-        bloom_n_shards: int = 1,
         warc_dir: str | None = None,
         index=None,
         canonicalize_redirects: bool = False,
@@ -146,33 +142,6 @@ class CrawlLoop:
         self.content_cache = content_cache
         self.metrics_path = metrics_path
         self.fetch_threads = fetch_threads
-        # bloom_prefilter=True drops already-known urls from the
-        # DISCOVERED stream BEFORE the merge via the zero-seen-shuffle
-        # Bloom membership (dedup.bloom_unseen_broadcast with
-        # broadcast_residue): a DISCOVERED row for an existing url is a
-        # merge no-op (insert-if-absent), so the final frontier is
-        # IDENTICAL (equivalence-tested) — but the merge input shrinks to
-        # genuinely-new urls, which shrinks the touched-bucket set the
-        # pruned merge_commit must rewrite. Size bloom_m_bits ~10 bits
-        # per frontier url (the reference's per-JVM seen caches play this
-        # role: AbstractQueryingSpout.java:149-175).
-        self.bloom_prefilter = bloom_prefilter
-        self.bloom_m_bits = bloom_m_bits
-        # bloom_refresh_every > 1 amortizes the bitmap build across
-        # generations. SAFE here despite Bloom's addition-staleness (a
-        # bitmap missing urls inserted since its build classifies them
-        # definitely-unseen): those rows just re-enter the merge, whose
-        # insert-if-absent semantics no-op them — exactly the duplicates
-        # the prefilter exists to shed, traded against the rebuild cost.
-        self.bloom_refresh_every = bloom_refresh_every
-        # bloom_n_shards > 1 switches the prefilter to the array-SHARDED
-        # broadcast form (dedup.bloom_unseen_broadcast_sharded): one
-        # lazily-pulled TorrentBroadcast per shard instead of one bitmap
-        # that at 10^9 frontier urls weighs ~1.2 GB. bloom_m_bits stays
-        # the TOTAL budget; each shard holds m_bits / n_shards bits.
-        self.bloom_n_shards = bloom_n_shards
-        self._bloom_bcast = None  # one Broadcast, or a list when sharded
-        self._bloom_built_gen = -(10**9)
         # rank_priority=True is OPIC-style focused crawling: each
         # generation appends the observed host→host link edges to a side
         # store, ranks hosts by PageRank over the graph SO FAR, and the
@@ -187,9 +156,8 @@ class CrawlLoop:
         self._host_edge_store = side_store(rank_priority, "_host_edges")
         self.rank_max_buckets = rank_max_buckets
         # rank_refresh_every > 1 amortizes the per-generation host
-        # PageRank (the same staleness trade as bloom_refresh_every, and
-        # safer: a stale rank only re-ORDERS hosts, every due host still
-        # eventually crawls). Measured at 100k pages / 1000 hosts:
+        # PageRank: a stale rank only re-ORDERS hosts, every due host
+        # still eventually crawls. Measured at 100k pages / 1000 hosts:
         # re-ranking every generation costs +68% crawl wall time; every
         # 3rd generation cuts that to roughly a third.
         self.rank_refresh_every = rank_refresh_every
@@ -275,13 +243,17 @@ class CrawlLoop:
         self.forecast_delays = forecast_delays
         # compact_every > 0 runs FrontierTable.compact (OPTIMIZE) every N
         # generations, right after the generation's merge commits: the
-        # pruned merge_commit fragments each touched bucket by up to
-        # shuffle-partitions files per generation, and without a cadence
-        # a long crawl's file count grows without bound (the lakehouse
-        # maintenance loop every Delta/Iceberg deployment schedules).
+        # pruned merge_commit adds 2–3 files to each touched bucket per
+        # generation (AQE coalesces its write to 2–3 tasks), and without
+        # a cadence a long crawl's file count grows without bound (the
+        # lakehouse maintenance loop every Delta/Iceberg deployment
+        # schedules).
         self.compact_every = compact_every
         self.compact_max_files_per_bucket = compact_max_files_per_bucket
         self.table = FrontierTable(frontier_path, partition_by="bucket")
+        # refuse a frontier in the old unpartitioned layout before a
+        # generation fetches, archives and indexes against it
+        self.table.check_partitioned()
         self.generation = self._committed_generation()
         # crawl depth rides as a flat column next to the frontier schema;
         # adaptive mode adds (signature, fetch_interval) for change-driven
@@ -793,7 +765,9 @@ class CrawlLoop:
         )
         # cached: counted below AND unioned into the merge updates — the
         # outlink union + filter chain is the second-most expensive stage
-        # after the fetch itself and must run once, not twice
+        # after the fetch itself and must run once, not twice. Urls the
+        # frontier already holds stay in: the merge inserts only absent
+        # urls, so a re-discovery changes no row.
         discovered = (
             filtered.where(F.col("filtered_url").isNotNull())
             .select(
@@ -801,72 +775,8 @@ class CrawlLoop:
                 (F.coalesce(F.col("src_depth"), F.lit(0)) + 1).alias("depth"),
             )
             .withColumn("status", F.lit("DISCOVERED"))
+            .cache()
         )
-        if self.bloom_prefilter and self.table.exists():
-            from ..operators.dedup import (
-                bloom_bitmap_array,
-                bloom_bitmap_array_sharded,
-                bloom_unseen_broadcast,
-                bloom_unseen_broadcast_sharded,
-            )
-
-            # keep min depth per url first: the prefilter is exact on
-            # MEMBERSHIP, and the merge's own min-depth pick only sees
-            # rows that survive, so collapse duplicates before probing
-            discovered = discovered.groupBy("url").agg(
-                F.min("depth").alias("depth"),
-                F.first("status").alias("status"),
-            )
-            sharded = self.bloom_n_shards > 1
-            if (
-                self._bloom_bcast is None
-                or self.generation - self._bloom_built_gen
-                >= self.bloom_refresh_every
-            ):
-                if self._bloom_bcast is not None:
-                    for b in (
-                        self._bloom_bcast
-                        if isinstance(self._bloom_bcast, list)
-                        else [self._bloom_bcast]
-                    ):
-                        b.destroy()
-                if sharded:
-                    arrays = bloom_bitmap_array_sharded(
-                        frontier.select("url"), "url", self.bloom_n_shards,
-                        m_bits=self.bloom_m_bits // self.bloom_n_shards,
-                    )
-                    self._bloom_bcast = [
-                        self.spark.sparkContext.broadcast(a) for a in arrays
-                    ]
-                else:
-                    arr = bloom_bitmap_array(
-                        frontier.select("url"), "url",
-                        m_bits=self.bloom_m_bits,
-                    )
-                    self._bloom_bcast = self.spark.sparkContext.broadcast(
-                        arr
-                    )
-                self._bloom_built_gen = self.generation
-            if sharded:
-                discovered = bloom_unseen_broadcast_sharded(
-                    frontier.select("url"),
-                    discovered,
-                    "url",
-                    n_shards=self.bloom_n_shards,
-                    m_bits=self.bloom_m_bits // self.bloom_n_shards,
-                    bitmap_arrays=self._bloom_bcast,
-                    broadcast_residue=True,
-                )
-            else:
-                discovered = bloom_unseen_broadcast(
-                    frontier.select("url"),
-                    discovered,
-                    "url",
-                    m_bits=self.bloom_m_bits,
-                    bitmap_array=self._bloom_bcast,
-                    broadcast_residue=True,
-                )
-        discovered = discovered.cache()
 
         # fetch-level statuses for everything that was attempted
         fetch_status = fetched.select(

@@ -122,6 +122,21 @@ class VersionedTable:
             if name.startswith(prefix)
         }
 
+    def check_partitioned(self) -> None:
+        """Raise when the current snapshot holds parquet files outside
+        partition directories (written without ``partition_by``): a
+        carry-forward commit links partitions only, so it would drop
+        those rows. A driver-side listing, never a data read."""
+        snap = self.snapshot()
+        if os.path.isdir(snap) and any(
+            name.endswith(".parquet") for name in os.listdir(snap)
+        ):
+            raise ValueError(
+                f"{snap} holds parquet files outside {self.partition_by}="
+                " partitions; a carry-forward commit would drop them —"
+                " convert it with a replace commit first (MIGRATION.md)"
+            )
+
     def read(
         self,
         spark: SparkSession,
@@ -161,10 +176,8 @@ class VersionedTable:
         1. A ``batch_id`` equal to the current mark is a replay: return
            without writing.
         2. Write ``df`` into the next snapshot (skipped when ``rewrites``
-           is empty). A carry-forward commit over a snapshot holding
-           parquet files outside partition directories (written without
-           ``partition_by``) raises first: step 3 links partitions only,
-           so those rows would be lost.
+           is empty). A carry-forward commit first runs
+           :meth:`check_partitioned`: step 3 links partitions only.
         3. Hard-link every partition of the current snapshot that
            ``rewrites`` does not name (``None`` replaces everything).
         4. Write the mark: ``batch_id``, or the previous mark carried
@@ -176,15 +189,9 @@ class VersionedTable:
         v = self.current_version()
         if batch_id is not None and batch_id == mark:
             return v
+        if rewrites is not None:
+            self.check_partitioned()
         old, new = self.snapshot(v), self.snapshot(v + 1)
-        if rewrites is not None and os.path.isdir(old) and any(
-            name.endswith(".parquet") for name in os.listdir(old)
-        ):
-            raise ValueError(
-                f"{old} holds parquet files outside {self.partition_by}="
-                " partitions; a carry-forward commit would drop them —"
-                " convert it with a replace commit first (MIGRATION.md)"
-            )
         # leftovers of a crashed attempt are in no reader's lineage
         shutil.rmtree(new, ignore_errors=True)
         if rewrites is None or len(rewrites):
@@ -303,6 +310,8 @@ class FrontierTable(VersionedTable):
 
         if self.partition_by != "bucket":
             raise ValueError("merge_commit requires partition_by='bucket'")
+        if batch_id is not None and batch_id == self.last_batch_id():
+            return self.current_version()  # a replay runs no Spark job
         touched = _distinct_ints(
             updates.select(bucket_expr(host_key_expr(F.col("url"))))
         )
@@ -321,10 +330,10 @@ class FrontierTable(VersionedTable):
         """OPTIMIZE (small-file compaction) for the bucket-partitioned
         table — the operational primitive every incremental lakehouse
         merge makes necessary: each ``merge_commit`` rewrites a touched
-        bucket with however many shuffle tasks hold its rows (up to
-        ``spark.sql.shuffle.partitions`` files per bucket per
-        generation), and a long crawl accretes exactly the small-file
-        problem Delta/Iceberg ``OPTIMIZE`` exists for.
+        bucket with however many write tasks hold its rows (AQE
+        coalesces the merge's write to 2–3 tasks, so 2–3 files per
+        bucket per generation), and a long crawl accretes exactly the
+        small-file problem Delta/Iceberg ``OPTIMIZE`` exists for.
 
         Rewrites ONLY buckets whose parquet file count exceeds
         ``max_files_per_bucket`` — ``repartition(n, "bucket")`` puts each

@@ -17,7 +17,7 @@ three Spark shapes, all here:
 
 At scale: watermarks bound state; the stateful op partitions by key (one
 shuffle); foreachBatch writes go through the same bucketed frontier layout
-as batch generations.
+and ``FrontierTable.merge_commit`` as batch generations.
 """
 
 from __future__ import annotations
@@ -175,21 +175,21 @@ def stateful_url_dedup(updates: DataFrame, ttl_minutes: int = 60) -> DataFrame:
 
 def make_streaming_merger(table, now_fn=None):
     """The foreachBatch function for continuous frontier maintenance,
-    factored out so tests can drive epoch replay directly. Exactly-once:
-    foreachBatch is at-least-once on failure (a crash between the commit
-    and the checkpoint write REPLAYS the epoch), and FETCH_ERROR
-    escalation is not naturally idempotent — so the epoch id is recorded
-    in the snapshot and the commit of a replayed epoch is a no-op (the
+    factored out so tests can drive epoch replay directly. ``table`` is a
+    bucket-partitioned ``FrontierTable``: each epoch is one
+    ``merge_commit``, the batch loop's write path, which rewrites only
+    the buckets the epoch touches. Exactly-once: foreachBatch is
+    at-least-once on failure (a crash between the commit and the
+    checkpoint write REPLAYS the epoch), and FETCH_ERROR escalation is
+    not naturally idempotent — so the epoch id is recorded in the
+    snapshot and the commit of a replayed epoch is a no-op (the
     streaming use of the table's batch_id contract; Delta's foreachBatch
-    txnAppId/txnVersion idiom). The merge plan is lazy: a replay never
-    runs it."""
-    from ..operators.status_merge import merge_status_updates
+    txnAppId/txnVersion idiom)."""
 
     def merge_batch(batch_df, batch_id: int):
         spark = batch_df.sparkSession
         now = (now_fn or (lambda b: f"2024-01-15 {b % 24:02d}:00:00"))(batch_id)
-        merged = merge_status_updates(table.read(spark), batch_df, now)
-        table.commit(merged, batch_id=f"epoch-{batch_id}")
+        table.merge_commit(spark, batch_df, now, batch_id=f"epoch-{batch_id}")
 
     return merge_batch
 
@@ -206,7 +206,7 @@ def stream_status_updates_into_frontier(
     exactly-once epoch guard; see ``make_streaming_merger``)."""
     from .frontier_table import FrontierTable
 
-    table = FrontierTable(frontier_path)
+    table = FrontierTable(frontier_path, partition_by="bucket")
     return (
         updates_stream.writeStream.foreachBatch(
             make_streaming_merger(table, now_fn)

@@ -66,8 +66,8 @@ def test_build_crawl_loop_from_config(spark, tmp_path):
 
 def test_build_crawl_loop_round8_knobs(spark, tmp_path):
     """The r8 scale/topology knobs flow from config keys into CrawlLoop
-    (Bloom prefilter, WARC archiving, rank priority) and a configured
-    crawl still converges."""
+    (WARC archiving, rank priority) and a configured crawl still
+    converges."""
     import glob
 
     from incubator_stormcrawler_spark.config import build_crawl_loop
@@ -78,17 +78,12 @@ def test_build_crawl_loop_round8_knobs(spark, tmp_path):
     conf = {
         "frontier.path": str(tmp_path / "frontier"),
         "fetcher.server.delay": 0.0,
-        "frontier.bloom.prefilter": True,
-        "frontier.bloom.m.bits": 1 << 16,
-        "frontier.bloom.refresh.every": 2,
         "warc.dir": str(tmp_path / "warc"),
         "spout.rank.priority": True,
         "spout.rank.max.buckets": 4,
         "spout.rank.refresh.every": 3,
     }
     loop = build_crawl_loop(spark, conf, lambda: MemoryProtocol(site))
-    assert loop.bloom_prefilter
-    assert loop.bloom_m_bits == 1 << 16 and loop.bloom_refresh_every == 2
     assert loop.rank_priority and loop.rank_max_buckets == 4
     assert loop.rank_refresh_every == 3
     loop.inject_seeds(

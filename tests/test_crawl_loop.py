@@ -368,8 +368,9 @@ def test_carry_forward_over_unpartitioned_frontier_raises(spark, tmp_path):
     carry-forward commit links partition directories only, so the
     partitioned merge into it used to drop those rows silently: it kept
     only the rows of the buckets a generation touched (1 of these 6
-    after one generation capped at one URL). It now raises before
-    writing, and the table is unchanged."""
+    after one generation capped at one URL). A new loop over it now
+    raises at construction, a merge into it raises before writing, and
+    the table is unchanged."""
     from incubator_stormcrawler_spark.streaming.frontier_table import (
         FrontierTable,
     )
@@ -398,6 +399,9 @@ def test_carry_forward_over_unpartitioned_frontier_raises(spark, tmp_path):
     version = loop.table.current_version()
     before = sorted(tuple(r) for r in loop.read_frontier().collect())
     assert len(before) == 6
+    # a loop built over that layout is refused before any generation
+    with pytest.raises(ValueError, match="outside bucket= partitions"):
+        CrawlLoop(spark, path, lambda: MemoryProtocol(site))
 
     with pytest.raises(ValueError, match="outside bucket= partitions"):
         loop.run_generation()
@@ -519,58 +523,6 @@ def test_recursive_crawl_50k_exactly_once_at_scale(spark):
     assert r["frontier_fetched"] == 50_000
     # fanout-8 tree over 50k ids exhausts in ~7 content generations
     assert r["generations"] <= 10, r["generations"]
-
-
-def test_bloom_prefilter_crawl_equivalence(spark, tmp_path):
-    """bloom_prefilter=True must leave the crawl's OBSERVABLE state
-    identical — the prefilter only removes DISCOVERED rows the merge
-    would no-op anyway (insert-if-absent), while shrinking the merge
-    input to genuinely-new urls. Run the same closed-graph crawl with
-    the prefilter off and on (tiny m_bits=256 to force false positives
-    through the exact residue path) and compare full frontiers."""
-    site = build_site(3, 5)
-
-    def run(name, **kw):
-        loop = CrawlLoop(
-            spark,
-            frontier_path=str(tmp_path / name),
-            protocol_factory=lambda: MemoryProtocol(site),
-            server_delay=0.0,
-            max_per_bucket=50,
-            max_results=200,
-            **kw,
-        )
-        seeds = spark.createDataFrame([("https://h0.example/p0",)], ["url"])
-        loop.inject_seeds(seeds)
-        loop.run(4)
-        return {
-            (r.url, r.status, r.depth)
-            for r in loop.read_frontier().collect()
-        }
-
-    base = run("f_plain")
-    pre = run("f_bloom", bloom_prefilter=True, bloom_m_bits=256)
-    assert pre == base
-    # amortized bitmap (refresh every 3 generations): the STALE bitmap
-    # misclassifies newly-inserted urls as unseen, and the merge's
-    # insert-if-absent must absorb them — state still identical
-    stale = run(
-        "f_bloom_stale",
-        bloom_prefilter=True,
-        bloom_m_bits=256,
-        bloom_refresh_every=3,
-    )
-    assert stale == base
-    # r9: the array-SHARDED prefilter (one lazy broadcast per shard — the
-    # 10^9-url form) must be just as invisible, saturation and all
-    shard = run(
-        "f_bloom_sharded",
-        bloom_prefilter=True,
-        bloom_m_bits=256,
-        bloom_n_shards=4,
-    )
-    assert shard == base
-    assert len({u for u, _, _ in base}) == len(site)
 
 
 def test_crawl_archives_warc_per_generation(spark, tmp_path):

@@ -3,6 +3,7 @@ and the continuous frontier merge (foreachBatch)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -119,6 +120,15 @@ def test_streaming_frontier_merge(spark, tmp_path):
         assert got["https://a.com/2"].status == "FETCH_ERROR"
         assert got["https://a.com/2"].error_count == 1
         assert got["https://a.com/3"].status == "DISCOVERED"
+        # the sink commits through merge_commit into the bucketed layout
+        for v in table.versions():
+            snap = table.snapshot(v)
+            files = glob.glob(f"{snap}/**/*.parquet", recursive=True)
+            assert files and all(
+                os.path.basename(os.path.dirname(f)).startswith("bucket=")
+                and os.path.dirname(os.path.dirname(f)) == snap
+                for f in files
+            ), files
     finally:
         q.stop()
 
@@ -426,16 +436,22 @@ def test_streaming_epoch_replay_is_exactly_once(spark, tmp_path):
     same batch_id. FETCH_ERROR escalation is not naturally idempotent,
     so the merger must detect the recorded epoch and no-op — error_count
     stays 1, version doesn't advance. A NEW epoch still applies."""
+    from pyspark.sql import functions as F
+
+    from incubator_stormcrawler_spark.functions.urls import (
+        bucket_expr,
+        host_key_expr,
+    )
     from incubator_stormcrawler_spark.streaming.streams import (
         make_streaming_merger,
     )
 
-    table = FrontierTable(str(tmp_path / "f"))
+    table = FrontierTable(str(tmp_path / "f"), partition_by="bucket")
     table.commit(spark.createDataFrame(
-        [("https://a.com/1", "DISCOVERED", None, 0, "a.com", 0)],
+        [("https://a.com/1", "DISCOVERED", None, 0, "a.com")],
         "url string, status string, next_fetch_date timestamp, "
-        "error_count int, key string, bucket int",
-    ))
+        "error_count int, key string",
+    ).withColumn("bucket", bucket_expr(host_key_expr(F.col("url")))))
     merge_batch = make_streaming_merger(table)
     errs = spark.createDataFrame(
         [("https://a.com/1", "FETCH_ERROR")], "url string, status string"

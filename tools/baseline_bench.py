@@ -284,7 +284,6 @@ def bench_recursive_crawl(
     hosts: int = 1000,
     fanout: int = 4,
     adaptive: bool = True,
-    bloom_prefilter: bool = False,
     rank_priority: bool = False,
     **loop_kw,
 ) -> dict:
@@ -335,18 +334,15 @@ def bench_recursive_crawl(
             max_per_bucket=n_pages,
             max_results=n_pages,
             adaptive=adaptive,
-            bloom_prefilter=bloom_prefilter,
             # rank_priority with max_buckets=hosts keeps coverage
             # identical (every due host still crawls) while exercising
             # the per-generation host-PageRank + rank-ordered bucket
             # choice at scale — the measurement is its overhead
             rank_priority=rank_priority,
             rank_max_buckets=hosts,
-            # ~10 bits per eventual frontier url
-            bloom_m_bits=1 << max(16, (10 * n_pages - 1).bit_length()),
-            # extra CrawlLoop options (forecast_sizing, bloom_n_shards,
-            # warc_dir, index, ...) pass straight through — the
-            # full-stack mode turns everything on at once
+            # extra CrawlLoop options (forecast_sizing, warc_dir, index,
+            # ...) pass straight through — the full-stack mode turns
+            # everything on at once
             **loop_kw,
         )
         seeds = spark.createDataFrame(
@@ -380,7 +376,6 @@ def bench_recursive_crawl(
             "n_pages": n_pages,
             "hosts": hosts,
             "fanout": fanout,
-            "bloom_prefilter": bloom_prefilter,
             "generations": len(gens) - 1,  # last one is the empty probe
             "total_fetched": total_fetched,
             "frontier_rows": n_rows,

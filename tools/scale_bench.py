@@ -1416,13 +1416,13 @@ def zorder_main():
 def full_stack_crawl_main():
     """`--crawl-full-stack`: the whole feature surface ON at once —
     rank-prioritized bucket choice, politeness forecast sizing (no-op cap
-    at server_delay 0: coverage must stay identical), the array-SHARDED
-    Bloom prefilter, per-generation WARC archiving, the live index with
-    the deletion stream, and (since r13) incremental MinHash near-dedup
-    on the index stream with its band-key side store — run to exhaustion
-    at 100k pages with the exactly-once checks. The measurement is the
-    integration overhead vs the plain crawl; the assertion is that SIX
-    features composed do not bend exactly-once (near-dedup only filters
+    at server_delay 0: coverage must stay identical), per-generation
+    WARC archiving, the live index with the deletion stream, and (since
+    r13) incremental MinHash near-dedup on the index stream with its
+    band-key side store — run to exhaustion at 100k pages with the
+    exactly-once checks. The measurement is the integration overhead vs
+    the plain crawl; the assertion is that FIVE features composed do not
+    bend exactly-once (near-dedup only filters
     the INDEX stream — fetch counts and frontier state must be
     untouched by it)."""
     import shutil as _shutil
@@ -1444,8 +1444,6 @@ def full_stack_crawl_main():
     try:
         full = bench_recursive_crawl(
             spark, n_pages=100_000, hosts=1000, fanout=8,
-            bloom_prefilter=True,
-            bloom_n_shards=8,
             rank_priority=True,
             rank_refresh_every=3,
             forecast_sizing=True,
@@ -1470,8 +1468,7 @@ def full_stack_crawl_main():
             "n_pages", "generations", "wall_sec", "pages_per_sec",
             "exactly_once")},
         "overhead_x": round(full["wall_sec"] / plain["wall_sec"], 2),
-        "features": ["rank_priority", "forecast_sizing",
-                     "bloom_sharded8", "warc",
+        "features": ["rank_priority", "forecast_sizing", "warc",
                      "log_structured_index+deletions", "near_dedup"],
     }
     print(f"## full_stack_crawl: {entry}", flush=True)
