@@ -21,7 +21,9 @@ and band keys) — each a ``VersionedTable`` (streaming/frontier_table.py:
 ``v%06d`` snapshots, an atomically replaced ``_VERSION`` pointer and a
 ``_BATCH`` exactly-once mark) locally, Delta/Iceberg on a cluster; the
 MERGE is expressed as a plan rewrite here and maps 1:1 onto ``MERGE
-INTO`` where available.
+INTO`` where available. The index, the content cache and the side
+stores are ``SegmentLog``s: a commit appends one segment, and the
+``compact_every`` cadence folds each log into one.
 Lineage + an idempotent merge replace Storm's ack/fail at-least-once
 contract.
 
@@ -57,7 +59,7 @@ from ..operators.frontier import frontier_topk
 from ..operators.status_merge import merge_status_updates
 from ..parse.html import parse_pages, split_parse_streams
 from ..protocol.fetch import fetch, politeness_partition
-from .frontier_table import FrontierTable, ResolvedMapStore, VersionedTable
+from .frontier_table import FrontierTable, ResolvedMapStore, SegmentLog
 
 # MinHash parameters of the near-dedup signature store: each kept doc
 # stores NEAR_DEDUP_NUM_HASHES signature rows and one band key per
@@ -67,10 +69,10 @@ NEAR_DEDUP_BAND_ROWS = 2
 NEAR_DEDUP_NGRAM = 3
 # power iterations of the host PageRank behind rank_priority
 RANK_ITERATIONS = 3
-# side-store schemas; ``seg`` is the segment VersionedTable.append writes
-EDGE_DDL = "src string, dst string, seg int"
-SIGNATURE_DDL = "doc_id string, h int, v string, seg int"
-BAND_DDL = "doc_id string, b int, bkey string, seg int"
+# side-store schemas
+EDGE_DDL = "src string, dst string"
+SIGNATURE_DDL = "doc_id string, h int, v string"
+BAND_DDL = "doc_id string, b int, bkey string"
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -124,8 +126,8 @@ class CrawlLoop:
         self.spark = spark
         self.frontier_path = frontier_path
 
-        def side_store(on: bool, name: str) -> VersionedTable | None:
-            return VersionedTable(frontier_path + name, "seg") if on else None
+        def side_store(on: bool, name: str, ddl: str) -> SegmentLog | None:
+            return SegmentLog(frontier_path + name, ddl) if on else None
 
         self.protocol_factory = protocol_factory
         self.filter_chain = filter_chain or URLFilterChain([])
@@ -153,7 +155,9 @@ class CrawlLoop:
         # (urlbuffer/PriorityURLBuffer.java:40). Generation 1 (no edges
         # yet) falls back to the plain urgency-ordered top-k.
         self.rank_priority = rank_priority
-        self._host_edge_store = side_store(rank_priority, "_host_edges")
+        self._host_edge_store = side_store(
+            rank_priority, "_host_edges", EDGE_DDL
+        )
         self.rank_max_buckets = rank_max_buckets
         # rank_refresh_every > 1 amortizes the per-generation host
         # PageRank: a stale rank only re-ORDERS hosts, every due host
@@ -197,7 +201,7 @@ class CrawlLoop:
         # a harmless no-op for redirected urls.
         self.canonicalize_redirects = canonicalize_redirects
         self._redirect_edge_store = side_store(
-            canonicalize_redirects, "_redirect_edges"
+            canonicalize_redirects, "_redirect_edges", EDGE_DDL
         )
         self._resolved_store = (
             ResolvedMapStore(frontier_path + "_redirect_resolved")
@@ -222,8 +226,12 @@ class CrawlLoop:
         # near-dedup; this is the 100 TB training-pipeline requirement
         # layered onto the same loop.
         self.near_dedup = near_dedup
-        self._sig_store = side_store(near_dedup, "_minhash_sigs")
-        self._band_store = side_store(near_dedup, "_minhash_bands")
+        self._sig_store = side_store(
+            near_dedup, "_minhash_sigs", SIGNATURE_DDL
+        )
+        self._band_store = side_store(
+            near_dedup, "_minhash_bands", BAND_DDL
+        )
         self.near_dedup_min_sim = near_dedup_min_sim
         # forecast_sizing=True caps each host's generation share at its
         # politeness-limited fetch forecast (frontier.fetch_forecast):
@@ -247,7 +255,9 @@ class CrawlLoop:
         # generation (AQE coalesces its write to 2–3 tasks), and without
         # a cadence a long crawl's file count grows without bound (the
         # lakehouse maintenance loop every Delta/Iceberg deployment
-        # schedules).
+        # schedules). The same cadence folds every segment log (index,
+        # content cache, side stores) into one segment of at most
+        # compact_max_files_per_bucket files.
         self.compact_every = compact_every
         self.compact_max_files_per_bucket = compact_max_files_per_bucket
         self.table = FrontierTable(frontier_path, partition_by="bucket")
@@ -376,10 +386,8 @@ class CrawlLoop:
         batch_sigs = _ckpt(minhash_signatures(
             batch, NEAR_DEDUP_NUM_HASHES, NEAR_DEDUP_NGRAM
         ))
-        index_sigs = self._sig_store.read(
-            self.spark, schema=SIGNATURE_DDL
-        ).drop("seg")
-        index_bands = self._band_store.read(self.spark, schema=BAND_DDL)
+        index_sigs = self._sig_store.read(self.spark)
+        index_bands = self._band_store.read(self.spark)
         pairs = incremental_lsh_dedup(
             batch,
             index_sigs,
@@ -421,28 +429,6 @@ class CrawlLoop:
             self._sig_store.append(kept_sigs)
         return kept, n_dropped
 
-    def _compact_edge_stores(self) -> None:
-        """File-count hygiene for the append-only side stores, on the
-        same cadence as FrontierTable.compact: the stores are already
-        LOGICALLY distinct (anti-join appends), so this only folds each
-        store's per-generation segments into one segment of a bounded
-        file count. The fold is a replace commit: it writes the next
-        snapshot, never its own input, so a crash leaves the store as it
-        was. A store of one segment is left alone."""
-        for store, ddl in (
-            (self._host_edge_store, EDGE_DDL),
-            (self._redirect_edge_store, EDGE_DDL),
-            (self._sig_store, SIGNATURE_DDL),
-            (self._band_store, BAND_DDL),
-        ):
-            if store is not None and len(store.partition_files()) > 1:
-                store.append(
-                    store.read(self.spark, schema=ddl).repartition(
-                        self.compact_max_files_per_bucket
-                    ),
-                    alone=True,
-                )
-
     def _host_ranks(self) -> DataFrame | None:
         """PageRank over the host graph observed so far (None before any
         edges exist — generation 1 crawls urgency-ordered). The graph is
@@ -460,7 +446,7 @@ class CrawlLoop:
             < self.rank_refresh_every
         )
         if not fresh_enough:
-            edges = self._host_edge_store.read(self.spark, schema=EDGE_DDL)
+            edges = self._host_edge_store.read(self.spark)
             new_cache, new_ckpt = _local_checkpoint_tracked(
                 link_rank(edges, iterations=RANK_ITERATIONS)
             )
@@ -720,7 +706,7 @@ class CrawlLoop:
                 )
                 .distinct()
                 .join(
-                    self._host_edge_store.read(self.spark, schema=EDGE_DDL),
+                    self._host_edge_store.read(self.spark),
                     ["src", "dst"],
                     "left_anti",
                 )
@@ -858,9 +844,7 @@ class CrawlLoop:
                 edge_store = self._redirect_edge_store
                 fresh_edges = _ckpt(
                     gen_edges.join(
-                        edge_store.read(self.spark, schema=EDGE_DDL).select(
-                            "src"
-                        ),
+                        edge_store.read(self.spark).select("src"),
                         "src",
                         "left_anti",
                     )
@@ -922,7 +906,12 @@ class CrawlLoop:
             # delta appends leave one side-store segment per generation;
             # folding them before the merge commits means a crash in a
             # fold retries this same generation, which folds them again
-            self._compact_edge_stores()
+            for log in (
+                self._host_edge_store, self._redirect_edge_store,
+                self._sig_store, self._band_store,
+            ):
+                if log is not None:
+                    log.compact(self.spark, self.compact_max_files_per_bucket)
         if self.index is not None:
             # frontier still holds the PREVIOUS state here; compare after
             # the merge below to find this generation's new ERRORs
@@ -956,13 +945,12 @@ class CrawlLoop:
                 self.spark,
                 max_files_per_bucket=self.compact_max_files_per_bucket,
             )
-            # a log-structured index / content cache folds its delta
-            # segments back into one base on the same cadence
-            # (per-generation commits are O(batch) appends; this bounds
-            # the read-side merge width)
-            for side in (self.index, self.content_cache):
-                if side is not None:
-                    side.compact(self.spark)
+            # the index and content cache fold their segments after the
+            # generation's deletions (per-generation commits are O(batch)
+            # appends; this bounds the read-side merge width)
+            for log in (self.index, self.content_cache):
+                if log is not None:
+                    log.compact(self.spark, self.compact_max_files_per_bucket)
         if self.metrics_path:
             # per-generation metrics table (StatusMetricsBolt cadence)
             self.spark.createDataFrame(

@@ -11,6 +11,11 @@ replaces the ``_VERSION`` pointer file; readers resolve the pointer
 first. On a real cluster this maps 1:1 onto Delta/Iceberg (``MERGE
 INTO`` + snapshot isolation); the operator code is identical either way
 — only this storage shim changes.
+
+The index, the content cache and the side stores are one kind of
+table on it, a :class:`SegmentLog`: per-commit delta segments folded by
+a periodic compaction — the state-store format of Structured Streaming
+(delta files plus snapshots).
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 FRONTIER_DDL = (
@@ -44,8 +49,8 @@ class VersionedTable:
       current snapshot is hard-linked into the new one — byte-identical
       file reuse, how a real table format carries unmodified files
       forward in its log;
-    - append: carry-forward with one fresh partition value — the
-      segment log of :meth:`append`.
+    - append: carry-forward with one fresh partition value — a
+      :class:`SegmentLog` segment.
 
     Crash contract, single writer: a commit is visible only once the
     pointer flips. A crash before the flip leaves a partial snapshot
@@ -228,16 +233,72 @@ class VersionedTable:
                 shutil.rmtree(self.snapshot(old_v), ignore_errors=True)
         return v + 1
 
-    def append(self, df: DataFrame, alone: bool = False) -> int:
-        """Commit ``df`` as segment ``partition_by`` = N, one past the
-        largest existing one, carrying every older segment forward. With
-        ``alone`` it is a replace commit: the table becomes that one
-        segment, which is how compaction folds the log."""
+
+class SegmentLog(VersionedTable):
+    """Append-only log of ``seg=N`` segments over ``schema`` (DDL),
+    folded into one segment by :meth:`compact`.
+
+    - :meth:`append` writes ``df`` as segment N, one past the largest,
+      and hard-links every older one: an O(batch) commit that never
+      reads the log.
+    - :meth:`read` is the union of every segment when ``key`` is None.
+      With a ``key`` it is merge-on-read, the LSM shape of an
+      OpenSearch/Lucene index or Delta/Iceberg merge-on-read: the newest
+      row per key by ``seg`` wins, and a tombstone (``__op`` = 'd')
+      drops the key. That read is one hash shuffle on the key over
+      every segment, which the compaction cadence bounds.
+    - :meth:`compact` is a replace commit of :meth:`read` as one
+      segment. It writes the next snapshot, never its own input, so a
+      crash leaves the log as it was.
+
+    A store in the snapshot layout (files outside ``seg=`` partitions)
+    is refused when the object is built: it would read as empty and
+    fail at its first append."""
+
+    def __init__(self, path: str, schema: str, key: str | None = None):
+        super().__init__(path, partition_by="seg")
+        self.schema = schema
+        self.key = key
+        self.check_partitioned()
+
+    def _segment(self, df: DataFrame, op: str) -> tuple[DataFrame, int]:
+        """``df`` tagged as the next segment (and ``__op`` = ``op`` in a
+        keyed log), with that segment's number."""
         seg = max(map(int, self.partition_files()), default=0) + 1
-        return self.commit(
-            df.withColumn(self.partition_by, F.lit(seg)),
-            rewrites=None if alone else [seg],
+        if self.key is not None:
+            df = df.withColumn("__op", F.lit(op))
+        return df.withColumn("seg", F.lit(seg)), seg
+
+    def append(
+        self, df: DataFrame, op: str = "u", batch_id: str | None = None
+    ) -> int:
+        """Commit ``df`` as the next segment. In a keyed log ``op`` is
+        'u' (upsert) or 'd' (tombstone: only the key column counts).
+        ``batch_id`` is :meth:`commit`'s exactly-once mark."""
+        rows, seg = self._segment(df, op)
+        return self.commit(rows, rewrites=[seg], batch_id=batch_id)
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        if self.key is None:
+            return super().read(
+                spark, schema=self.schema + ", seg int"
+            ).drop("seg")
+        w = Window.partitionBy(self.key).orderBy(F.desc("seg"))
+        return (
+            super().read(spark, schema=self.schema + ", __op string, seg int")
+            .withColumn("__rn", F.row_number().over(w))
+            .where((F.col("__rn") == 1) & (F.col("__op") == "u"))
+            .drop("__rn", "__op", "seg")
         )
+
+    def compact(self, spark: SparkSession, files: int) -> int:
+        """Fold the log into one segment of at most ``files`` files (the
+        OPTIMIZE / Lucene-merge step); returns the current version. A
+        log of one segment is left alone."""
+        if len(self.partition_files()) <= 1:
+            return self.current_version()
+        rows, _ = self._segment(self.read(spark).repartition(files), "u")
+        return self.commit(rows)
 
 
 def _distinct_ints(df: DataFrame) -> list[int]:
@@ -320,12 +381,7 @@ class FrontierTable(VersionedTable):
         return super().commit(merged, rewrites=touched, batch_id=batch_id)
 
     def compact(
-        self,
-        spark: SparkSession,
-        max_files_per_bucket: int = 1,
-        zorder: bool = False,
-        zorder_files_per_bucket: int = 4,
-        zorder_bits: int = 10,
+        self, spark: SparkSession, max_files_per_bucket: int = 1
     ) -> int:
         """OPTIMIZE (small-file compaction) for the bucket-partitioned
         table — the operational primitive every incremental lakehouse
@@ -344,81 +400,19 @@ class FrontierTable(VersionedTable):
         exactly-once retry guard survives compaction. The fragmentation
         inventory is ``partition_files`` — metadata bounded by the
         bucket count, never a data read. Returns the new version (or the
-        current one when nothing is fragmented — no empty commits).
-
-        ``zorder=True`` is OPTIMIZE ZORDER (the Delta idiom; reference
-        analog: routing/bucket clustering in the SQL status index,
-        external/sql/.../StatusUpdaterBolt.java:157-163): each fragmented
-        bucket is rewritten as ``zorder_files_per_bucket`` files
-        CLUSTERED by the Morton interleave of (next_fetch_date seconds,
-        xxhash64(key)) — operators.layout.zorder_key, the same codegen
-        bit arithmetic as the registered layout_zorder_stats query. Every
-        output file then covers a compact rectangle of (due-time × host)
-        space, so its parquet FOOTER min/max prunes BOTH the due scan
-        (``next_fetch_date <= now`` — frontier_topk's filter) and a
-        host-range lookup — verified against real pyarrow-read footers in
-        tests/test_streaming.py. One range shuffle over the fragmented
-        slice only. The rewrite targets ~``zorder_files_per_bucket``
-        files per bucket (range tasks that straddle a bucket boundary
-        add one), and the fragmentation threshold becomes
-        ``max(max_files_per_bucket, 2 * zorder_files_per_bucket)`` so
-        the clustered layout is a fixed point (re-running compact is a
-        no-op) — the OPTIMIZE idiom: trigger on accumulated small
-        files, not on exact counts. The curve is Morton with the date
-        axis on the top interleave bit, so files split by due time
-        first: the due scan is this table's one hot predicate."""
+        current one when nothing is fragmented — no empty commits)."""
         if self.partition_by != "bucket":
             raise ValueError("compact requires partition_by='bucket'")
-        threshold = (
-            max(max_files_per_bucket, 2 * zorder_files_per_bucket)
-            if zorder
-            else max_files_per_bucket
-        )
         frag = sorted(
             int(b) for b, n in self.partition_files().items()
-            if n > threshold
+            if n > max_files_per_bucket
         )
         if not frag:
             return self.current_version()
         frontier = self.read(spark).where(F.col("bucket").isin(frag))
-        if zorder:
-            from ..operators.layout import zorder_key
-
-            aug = frontier.withColumn(
-                "__z_nfd", F.col("next_fetch_date").cast("double")
-            ).withColumn("__z_kh", F.xxhash64("key").cast("double"))
-            # clamp the date axis at its 95th percentile before min-max
-            # scaling: the frontier's far-future "never" sentinel would
-            # otherwise stretch the grid until the whole live band fits
-            # one Z-cell. Clamped sentinel rows all land in the TOP cell
-            # — exactly the band every due scan skips.
-            hi = aug.agg(
-                F.expr("approx_percentile(__z_nfd, 0.95)")
-            ).first()[0]
-            if hi is not None:
-                aug = aug.withColumn(
-                    "__z_nfd", F.least(F.col("__z_nfd"), F.lit(float(hi)))
-                )
-            # column order matters: zorder_key gives the LAST column the
-            # higher bit of each interleave pair, and the due scan is the
-            # hot predicate — put the date axis there so the top zkey bit
-            # splits by due time first
-            keyed = zorder_key(aug, ["__z_kh", "__z_nfd"], bits=zorder_bits)
-            # range-partition on (bucket, zkey): each task holds one
-            # contiguous zkey slice of one bucket (row-count balanced by
-            # the range sampler — hot buckets get more files), and the
-            # partitionBy("bucket") write splits any straddling task per
-            # directory, so every output file is zkey-contiguous
-            to_rewrite = (
-                keyed.repartitionByRange(
-                    len(frag) * zorder_files_per_bucket, "bucket", "zkey"
-                )
-                .sortWithinPartitions("bucket", "zkey")
-                .drop("__z_nfd", "__z_kh", "zkey")
-            )
-        else:
-            to_rewrite = frontier.repartition(len(frag), "bucket")
-        return super().commit(to_rewrite, rewrites=frag)
+        return super().commit(
+            frontier.repartition(len(frag), "bucket"), rewrites=frag
+        )
 
 
 RESOLVED_MAP_BUCKETS = 32

@@ -15,6 +15,7 @@ def test_crawlbench_api_resolves_without_spark_jobs(spark, tmp_path):
     from crawlbench.workloads import FrontierReads, SteadyCrawl
 
     from incubator_stormcrawler_spark.operators import frontier as ops
+    from incubator_stormcrawler_spark.operators.indexing import IndexTable
     from incubator_stormcrawler_spark.protocol.fetch import MemoryProtocol
     from incubator_stormcrawler_spark.streaming.crawl_loop import CrawlLoop
     from incubator_stormcrawler_spark.streaming.frontier_table import (
@@ -48,6 +49,9 @@ def test_crawlbench_api_resolves_without_spark_jobs(spark, tmp_path):
                 lambda: MemoryProtocol({}),
                 bucket_partitioned=False,
             )
+        # and its index with log_structured=True, the only layout left
+        with pytest.raises(ValueError, match="snapshot index layout"):
+            IndexTable(str(tmp_path / "i"), log_structured=False)
 
         # frontier_reads' table and the calls it makes on it
         table = FrontierTable(str(tmp_path / "reads"), partition_by="bucket")

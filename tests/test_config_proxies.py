@@ -64,17 +64,23 @@ def test_build_crawl_loop_from_config(spark, tmp_path):
     }
 
 
-def test_build_crawl_loop_round8_knobs(spark, tmp_path):
+def test_build_crawl_loop_round8_knobs(spark, tmp_path, monkeypatch):
     """The r8 scale/topology knobs flow from config keys into CrawlLoop
     (WARC archiving, rank priority) and a configured crawl still
-    converges."""
+    converges. With spout.rank.refresh.every = 3 the host-rank table is
+    built once edges exist (generation 2) and reused in generation 3."""
     import glob
 
     from incubator_stormcrawler_spark.config import build_crawl_loop
+    from incubator_stormcrawler_spark.operators import linkrank
     from incubator_stormcrawler_spark.protocol.fetch import MemoryProtocol
 
-    site = {"https://h0.example/p0": "<html><a href='/p1'>x</a></html>",
-            "https://h0.example/p1": "<html>end</html>"}
+    # the cross-host link gives the host graph an edge to rank
+    site = {"https://h0.example/p0":
+            "<html><a href='/p1'>x</a>"
+            "<a href='https://h1.example/q'>y</a></html>",
+            "https://h0.example/p1": "<html>end</html>",
+            "https://h1.example/q": "<html>end</html>"}
     conf = {
         "frontier.path": str(tmp_path / "frontier"),
         "fetcher.server.delay": 0.0,
@@ -89,7 +95,20 @@ def test_build_crawl_loop_round8_knobs(spark, tmp_path):
     loop.inject_seeds(
         spark.createDataFrame([("https://h0.example/p0",)], ["url"])
     )
-    loop.run(3)
+    builds = []
+    real_link_rank = linkrank.link_rank
+
+    def counted_link_rank(*args, **kwargs):
+        builds.append(loop.generation)
+        return real_link_rank(*args, **kwargs)
+
+    monkeypatch.setattr(linkrank, "link_rank", counted_link_rank)
+    builds_after = []
+    for _ in range(3):
+        loop.run_generation()
+        builds_after.append(len(builds))
+    # none in generation 1 (no edges yet), one in 2, a reuse in 3
+    assert builds_after == [0, 1, 1]
     frontier = {r.url: r.status for r in loop.read_frontier().collect()}
     assert set(frontier) == set(site)
     assert all(st == "FETCHED" for st in frontier.values())

@@ -13,12 +13,7 @@ from incubator_stormcrawler_spark.operators.status_merge import (
     merge_status_updates,
 )
 from incubator_stormcrawler_spark.protocol.fetch import MemoryProtocol
-from incubator_stormcrawler_spark.streaming.crawl_loop import (
-    BAND_DDL,
-    EDGE_DDL,
-    SIGNATURE_DDL,
-    CrawlLoop,
-)
+from incubator_stormcrawler_spark.streaming.crawl_loop import CrawlLoop
 
 
 def build_site(n_hosts: int = 2, pages_per_host: int = 5) -> dict:
@@ -425,8 +420,8 @@ def test_generation_with_nothing_new_commits_no_index_or_cache_version(
     )
 
     site = {"https://h0.example/p0": "<html><body>zero</body></html>"}
-    index = IndexTable(str(tmp_path / "index"), log_structured=True)
-    cache = ContentCache(str(tmp_path / "cache"), log_structured=True)
+    index = IndexTable(str(tmp_path / "index"))
+    cache = ContentCache(str(tmp_path / "cache"))
     loop = CrawlLoop(
         spark,
         frontier_path=str(tmp_path / "frontier"),
@@ -440,13 +435,13 @@ def test_generation_with_nothing_new_commits_no_index_or_cache_version(
     )
     first = loop.run_generation()
     assert (first["fetched_ok"], first["docs"]) == (1, 1)
-    versions = (index.table.current_version(), cache.table.current_version())
+    versions = (index.current_version(), cache.current_version())
     assert versions == (1, 1)
     # p0 is next due a day later: nothing to fetch this generation
     second = loop.run_generation()
     assert (second["batch"], second["fetched_ok"], second["docs"]) == (0, 0, 0)
     assert (
-        index.table.current_version(), cache.table.current_version()
+        index.current_version(), cache.current_version()
     ) == versions
 
 
@@ -647,10 +642,12 @@ def test_crawl_indexes_docs_and_applies_deletions(spark, tmp_path):
 def test_crawl_with_log_structured_index_matches_snapshot(
     spark, tmp_path
 ):
-    """The LSM index mode through the FULL loop (upserts + the deletion
-    stream + the compact_every cadence): final index content identical
-    to the snapshot mode, per-generation commits are O(batch) segment
-    appends, and the cadenced compaction bounds the segment count."""
+    """The segment-log index through the FULL loop (upserts + the
+    deletion stream + the compact_every cadence): final index content
+    identical to what the former snapshot layout gave (pinned below
+    from a run of that layout), per-generation commits are O(batch)
+    segment appends, and the cadenced compaction bounds the segment
+    count."""
     from incubator_stormcrawler_spark.operators.indexing import IndexTable
 
     site = {
@@ -677,14 +674,13 @@ def test_crawl_with_log_structured_index_matches_snapshot(
         loop.run(6)
         return {r.url: r.title for r in idx.read(spark).collect()}
 
-    snap = run(IndexTable(str(tmp_path / "snap")), "f_snap")
-    log_idx = IndexTable(str(tmp_path / "log"), log_structured=True)
+    log_idx = IndexTable(str(tmp_path / "log"))
     log = run(log_idx, "f_log")
-    assert log == snap == {
+    assert log == {
         "https://h0.example/p0": "zero", "https://h1.example/p1": "one",
     }
     # the cadence kept the log bounded (compacted at gens 2/4/6)
-    assert len(log_idx.table.partition_files()) <= 3
+    assert len(log_idx.partition_files()) <= 3
 
 
 def test_canonicalize_redirects_keys_index_by_terminal_url(spark, tmp_path):
@@ -950,7 +946,7 @@ def test_redirect_side_stores_stay_distinct_and_match_full_resolve(
         spark.createDataFrame([("https://h0.example/a",)], ["url"])
     )
     loop.run(5)  # a refetches ~every generation: hop a->b re-observed
-    edges = loop._redirect_edge_store.read(spark, schema=EDGE_DDL)
+    edges = loop._redirect_edge_store.read(spark)
     rows = [(r.src, r.dst) for r in edges.collect()]
     assert len(rows) == len(set(rows)) == 2  # one row per observed hop
     # the map the indexer consumed == full resolve over the store
@@ -1046,7 +1042,7 @@ def test_host_edge_store_stays_distinct_across_generations(
     loop.run(5)
     edges = [
         (r.src, r.dst)
-        for r in loop._host_edge_store.read(spark, schema=EDGE_DDL).collect()
+        for r in loop._host_edge_store.read(spark).collect()
     ]
     assert len(edges) == len(set(edges)) == 2  # h0<->h1, once each
 
@@ -1088,9 +1084,7 @@ def test_crawl_compacts_edge_stores_on_cadence(spark, tmp_path):
         assert 1 <= len(files) <= 1, (store.path, files)
     edges = {
         (r.src, r.dst)
-        for r in loop._redirect_edge_store.read(
-            spark, schema=EDGE_DDL
-        ).collect()
+        for r in loop._redirect_edge_store.read(spark).collect()
     }
     assert edges == {
         ("https://h0.example/a", "https://h0.example/b"),
@@ -1151,14 +1145,14 @@ def test_side_store_compaction_crash_loses_nothing(
                 len(store.partition_files()),
                 {
                     (r.src, r.dst)
-                    for r in store.read(spark, schema=EDGE_DDL).collect()
+                    for r in store.read(spark).collect()
                 },
             )
             for store in stores
         ]
 
     pointers = {store._pointer for store in stores}
-    real_replace, real_compact = os.replace, loop._compact_edge_stores
+    real_replace, real_compact = os.replace, ftm.SegmentLog.compact
     folding = []
 
     def dying_replace(src, dst):
@@ -1166,15 +1160,15 @@ def test_side_store_compaction_crash_loses_nothing(
             raise OSError("simulated crash before pointer flip")
         return real_replace(src, dst)
 
-    def compact():
+    def compact(log, *args):
         folding.append(True)
         try:
-            real_compact()
+            return real_compact(log, *args)
         finally:
             folding.clear()
 
     monkeypatch.setattr(ftm.os, "replace", dying_replace)
-    monkeypatch.setattr(loop, "_compact_edge_stores", compact)
+    monkeypatch.setattr(ftm.SegmentLog, "compact", compact)
     loop.run_generation()
     with pytest.raises(OSError, match="simulated crash"):
         loop.run_generation()
@@ -1242,7 +1236,7 @@ def test_near_dedup_drops_cross_generation_near_duplicate(spark, tmp_path):
     # store: kept docs only, one signature set per doc (first-wins)
     from pyspark.sql import functions as F
 
-    sigs = loop._sig_store.read(spark, schema=SIGNATURE_DDL)
+    sigs = loop._sig_store.read(spark)
     per_doc = {
         r["doc_id"]: r["n"]
         for r in sigs.groupBy("doc_id")
@@ -1255,7 +1249,7 @@ def test_near_dedup_drops_cross_generation_near_duplicate(spark, tmp_path):
     # band store rides alongside: same doc set, num_hashes/band_rows
     # band keys per doc — the stored-bands match path never recomputes
     # the store's banding groupBy after generation 1
-    bands = loop._band_store.read(spark, schema=BAND_DDL)
+    bands = loop._band_store.read(spark)
     band_docs = {r.doc_id for r in bands.select("doc_id").distinct().collect()}
     assert band_docs == set(per_doc)
 
@@ -1292,14 +1286,13 @@ def test_near_dedup_reingest_keeps_first_signatures(spark, tmp_path):
     with loop._generation_scope():
         kept, dropped = loop._near_dedup_filter(docs(("urlA", text_v1)))
         assert (kept.count(), dropped) == (1, 0)
-    sigs_v1 = {(r.h, r.v) for r in loop._sig_store.read(
-        spark, schema=SIGNATURE_DDL).where("doc_id = 'urlA'").collect()}
+    sigs_v1 = {(r.h, r.v) for r in loop._sig_store.read(spark).where("doc_id = 'urlA'").collect()}
     # gen 2: A re-crawled with CHANGED content — kept (no self-match),
     # store signatures unchanged (first-wins)
     with loop._generation_scope():
         kept, dropped = loop._near_dedup_filter(docs(("urlA", text_v2)))
         assert (kept.count(), dropped) == (1, 0)
-    store = loop._sig_store.read(spark, schema=SIGNATURE_DDL)
+    store = loop._sig_store.read(spark)
     assert {(r.h, r.v) for r in store.where("doc_id = 'urlA'").collect()} \
         == sigs_v1
     assert store.groupBy("doc_id").count().where(

@@ -253,7 +253,7 @@ def test_cloudsearch_batching_limits():
 
 
 def _drive(idx, spark):
-    """The shared op sequence for the two-mode equivalence check:
+    """The op sequence of the snapshot-equivalence check:
     upserts (including an overwrite), a delete, then a re-upsert of the
     deleted url — order-sensitive on purpose."""
     idx.upsert(docs_df(spark, [
@@ -274,25 +274,28 @@ def _drive(idx, spark):
 
 
 def test_log_structured_index_equivalent_to_snapshot(spark, tmp_path):
-    """The LSM mode (O(batch) segment appends + newest-wins
-    merge-on-read) must be observationally identical to the snapshot
-    mode through upsert-overwrite-delete-reinsert sequences — the
-    storage layout is the only difference. Also pins that upserts never
-    read the store: four commits produce exactly four segments."""
-    snap = IndexTable(str(tmp_path / "snap"))
-    log = IndexTable(str(tmp_path / "log"), log_structured=True)
-    want = _drive(snap, spark)
+    """The segment log (O(batch) appends + newest-wins merge-on-read)
+    gives, through an upsert-overwrite-delete-reinsert sequence, the
+    result the former snapshot layout gave (pinned below from a run of
+    that layout). Also pins that upserts never read the store: four
+    commits produce exactly four segments."""
+    log = IndexTable(str(tmp_path / "log"))
+    want = {
+        "https://a.com/1": ("One v2", "body one v2"),
+        "https://a.com/2": ("Two reborn", "body two again"),
+        "https://a.com/3": ("Three", "body three"),
+    }
     got = _drive(log, spark)
     assert got == want
-    assert len(log.table.partition_files()) == 4
+    assert len(log.partition_files()) == 4
     # compaction folds to one base, content unchanged, old snapshots
     # vacuumed
-    log.compact(spark)
-    assert len(log.table.partition_files()) == 1
+    log.compact(spark, 1)
+    assert len(log.partition_files()) == 1
     assert {
         r.url: (r.title, r.text) for r in log.read(spark).collect()
     } == want
-    assert len(log.table.versions()) == log.table.keep
+    assert len(log.versions()) == log.keep
     # post-compaction ops keep working (sequence numbers keep rising)
     log.upsert(docs_df(spark, [("https://a.com/9", "Nine", "n")]))
     assert log.read(spark).count() == len(want) + 1
@@ -304,10 +307,10 @@ def test_log_structured_index_crash_unlisted_segment_ignored(
     """Crash contract: a segment written into a snapshot the pointer
     never reached (a torn write) is invisible to readers, and the next
     commit to that version overwrites it rather than double-counting."""
-    log = IndexTable(str(tmp_path / "log"), log_structured=True)
+    log = IndexTable(str(tmp_path / "log"))
     log.upsert(docs_df(spark, [("https://a.com/1", "One", "x")]))
     # torn write: the NEXT snapshot holds the next segment, unpublished
-    torn = os.path.join(log.table.snapshot(2), "seg=2")
+    torn = os.path.join(log.snapshot(2), "seg=2")
     log._new_rows(
         docs_df(spark, [("https://evil.example/", "Torn", "y")])
     ).withColumn("__op", F.lit("u")).write.mode("overwrite").parquet(torn)
@@ -321,12 +324,11 @@ def test_log_structured_index_crash_unlisted_segment_ignored(
 
 
 def test_content_cache_log_structured_split_and_compact(spark, tmp_path):
-    """The LSM content-cache mode: stores are O(batch) segment appends
-    (the snapshot mode rewrote the WHOLE cache per generation — and the
-    content cache is the loop's largest side table), split_cached
-    resolves hits/misses identically, re-stores of the same key do not
+    """The content cache as a segment log: stores are O(batch) segment
+    appends (the content cache is the loop's largest side table),
+    split_cached resolves hits/misses, re-stores of the same key do not
     duplicate, and compaction folds to one base with content intact."""
-    cache = ContentCache(str(tmp_path / "cache"), log_structured=True)
+    cache = ContentCache(str(tmp_path / "cache"))
     cache.store(spark.createDataFrame(
         [Row(url="https://a.com/1", content=bytearray(b"ONE"))]
     ))
@@ -334,7 +336,7 @@ def test_content_cache_log_structured_split_and_compact(spark, tmp_path):
         [Row(url="https://a.com/1", content=bytearray(b"ONE")),
          Row(url="https://a.com/2", content=bytearray(b"TWO"))]
     ))
-    assert len(cache.table.partition_files()) == 2  # appends only
+    assert len(cache.partition_files()) == 2  # appends only
     assert cache.read(spark).count() == 2  # newest-wins dedups the rekey
 
     batch = spark.createDataFrame(
@@ -346,8 +348,8 @@ def test_content_cache_log_structured_split_and_compact(spark, tmp_path):
     assert len(h) == 1 and bytes(h[0].content) == b"ONE"
     assert [r.url for r in misses.collect()] == ["https://a.com/9"]
 
-    cache.compact(spark)
-    assert len(cache.table.partition_files()) == 1
+    cache.compact(spark, 1)
+    assert len(cache.partition_files()) == 1
     hits2, misses2 = cache.split_cached(batch)
     assert len(hits2.collect()) == 1 and len(misses2.collect()) == 1
 
@@ -357,11 +359,30 @@ def test_log_structured_index_compacts_to_empty(spark, tmp_path):
     so its partitioned write leaves no parquet file — the read still
     returns 0 rows with the index's columns (the table supplies the
     schema instead of inferring it from files)."""
-    idx = IndexTable(str(tmp_path / "log"), log_structured=True)
+    idx = IndexTable(str(tmp_path / "log"))
     idx.upsert(docs_df(spark, [("https://a.com/1", "One", "x")]))
     idx.delete(spark.createDataFrame([("https://a.com/1",)], ["url"]))
-    idx.compact(spark)
-    assert idx.table.partition_files() == {}
+    idx.compact(spark, 1)
+    assert idx.partition_files() == {}
     out = idx.read(spark)
     assert out.count() == 0
     assert out.columns == ["doc_id", "url", "title", "text"]
+
+
+def test_snapshot_layout_store_refused_when_built(spark, tmp_path):
+    """A store left in the former snapshot layout (parquet files at the
+    snapshot's root, outside seg= partitions) is refused when the index
+    or cache object is built. Opened as a segment log it would read 0
+    rows without an error — a cache would report every url as a miss —
+    and its first append would raise in the middle of a generation."""
+    from incubator_stormcrawler_spark.streaming.frontier_table import (
+        VersionedTable,
+    )
+
+    path = str(tmp_path / "old")
+    VersionedTable(path).commit(IndexTable(str(tmp_path / "new"))._new_rows(
+        docs_df(spark, [("https://a.com/1", "One", "x")])
+    ))
+    for store in (IndexTable, ContentCache):
+        with pytest.raises(ValueError, match="outside seg= partitions"):
+            store(path)

@@ -585,98 +585,6 @@ def test_compact_merges_small_files_and_preserves_everything(spark, tmp_path):
     assert table.compact(spark, max_files_per_bucket=1) == v2
 
 
-def test_compact_zorder_clusters_buckets_and_real_footers_prune(
-    spark, tmp_path
-):
-    """OPTIMIZE ZORDER on the live table (r10, the r9 verdict's wiring
-    item): compact(zorder=True) rewrites each fragmented bucket as
-    zkey-clustered files — Morton(next_fetch_date, xxhash64(key)) — and
-    the claim is checked against REAL parquet footers: a due-scan
-    predicate (next_fetch_date <= early cutoff) must skip a strict
-    majority of the clustered files by footer min alone, while the
-    fragmented pre-compact layout (every file spans the whole date range)
-    prunes none. Content bit-identical, batch mark carried, and the
-    clustered layout is a fixed point for a re-run."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from incubator_stormcrawler_spark.operators.synthetic import (
-        synthetic_frontier,
-    )
-
-    NOW = "2024-01-15 00:00:00"
-    table = FrontierTable(str(tmp_path / "fz"), partition_by="bucket")
-    frontier = synthetic_frontier(spark, "/root/testdata/sf0.001")
-    # 40-task commit: > the zorder threshold (2 x 16 files/bucket), so
-    # every bucket is fragmented and gets the clustered rewrite
-    table.commit(frontier.repartition(40))
-    updates = spark.createDataFrame(
-        [("https://host1.example/p101", "FETCHED")],
-        "url string, status string",
-    )
-    table.merge_commit(spark, updates, NOW, batch_id="gen-z")
-    v = table.current_version()
-    before_rows = {tuple(r) for r in table.read(spark).collect()}
-
-    def footer_minmax(snap_dir):
-        """[(path, nfd_min, nfd_max)] over every bucket's parquet files."""
-        out = []
-        for f in glob.glob(f"{snap_dir}/bucket=*/*.parquet"):
-            meta = pq.ParquetFile(f).metadata
-            schema_names = [meta.schema.column(i).name
-                            for i in range(meta.num_columns)]
-            ci = schema_names.index("next_fetch_date")
-            mins, maxs = [], []
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(ci).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            out.append((f, min(mins), max(maxs)))
-        return out
-
-    # due cutoff ~22% into the clamped date range: with 8 clustered
-    # files per bucket the date axis (top interleave bit + one more)
-    # splits into quarters, so every file whose quarter starts at >=25%
-    # must carry a footer min above this cutoff — ~3/4 of files
-    import datetime
-
-    # pyarrow returns tz-aware stats (Spark writes isAdjustedToUTC);
-    # the fixture dates are written from a UTC-pinned session
-    cutoff = datetime.datetime(
-        2024, 1, 11, 0, 0, 0, tzinfo=datetime.timezone.utc
-    )
-
-    pre = footer_minmax(os.path.join(table.path, f"v{v:06d}"))
-    pre_frag = [t for t in pre
-                if "bucket=" in t[0]]
-    pre_pruned = sum(1 for _, mn, _ in pre if mn > cutoff)
-
-    v2 = table.compact(spark, zorder=True, zorder_files_per_bucket=16)
-    assert v2 == v + 1
-    snap2 = os.path.join(table.path, f"v{v2:06d}")
-    post = footer_minmax(snap2)
-    post_pruned = sum(1 for _, mn, _ in post if mn > cutoff)
-
-    # the fragmented layout prunes only by small-file luck (each file is
-    # a random handful of rows); the clustered one skips a strict
-    # majority of files for the quartile due scan, and at least doubles
-    # the baseline's skip fraction
-    pre_frac = pre_pruned / len(pre_frag)
-    post_frac = post_pruned / len(post)
-    assert pre_frac < 0.3, (pre_pruned, len(pre_frag))
-    assert post_pruned > len(post) // 2, (post_pruned, len(post))
-    assert post_frac > 2 * pre_frac, (pre_frac, post_frac)
-
-    after_rows = {tuple(r) for r in table.read(spark).collect()}
-    assert after_rows == before_rows
-    assert table.last_batch_id() == "gen-z"
-
-    # fixed point: every bucket is now well under the 2x threshold, so a
-    # re-run makes no empty commit
-    assert table.compact(spark, zorder=True, zorder_files_per_bucket=16) == v2
-
-
 def _bucket_inodes(snap_path: str) -> dict[int, set]:
     out: dict[int, set] = {}
     for name in os.listdir(snap_path):
@@ -802,27 +710,41 @@ def test_versioned_table_crash_points(spark, tmp_path, monkeypatch, mode):
        same batch id is a no-op.
 
     Carry-forward and append also keep every partition they do not
-    rewrite byte-identical (hard links to the previous snapshot)."""
+    rewrite byte-identical (hard links to the previous snapshot). Append
+    runs on a :class:`SegmentLog`, whose segments 0-2 the base commit
+    writes, so the append is segment 3."""
     from incubator_stormcrawler_spark.streaming import frontier_table as ftm
 
-    ddl = "k int, v string, p int"
+    ddl = "k int, v string, " + ("seg" if mode == "append" else "p") + " int"
     base = spark.createDataFrame(
         [(i, "old", i % 3) for i in range(9)], ddl
     )
     step = {  # (partition_by, rows committed, rewrites)
         "replace": (None, [(1, "new", 0), (2, "new", 5)], None),
         "carry_forward": ("p", [(1, "new", 1), (4, "new", 1)], [1]),
-        "append": ("p", [(100, "new", 3)], [3]),
+        "append": ("seg", [(100, "new", 3)], None),
     }[mode]
     partition_by, rows, rewrites = step
 
     def table(name):
-        t = ftm.VersionedTable(str(tmp_path / name), partition_by)
+        if mode == "append":
+            t = ftm.SegmentLog(str(tmp_path / name), "k int, v string")
+        else:
+            t = ftm.VersionedTable(str(tmp_path / name), partition_by)
         t.commit(base, batch_id="b0")
         return t
 
+    def commit(t):
+        df = spark.createDataFrame(rows, ddl)
+        if mode == "append":
+            return t.append(df.drop("seg"), batch_id="b1")
+        return t.commit(df, rewrites, batch_id="b1")
+
     def content(t):
-        return sorted(tuple(r) for r in t.read(spark, schema=ddl).collect())
+        return sorted(
+            tuple(r)
+            for r in ftm.VersionedTable.read(t, spark, schema=ddl).collect()
+        )
 
     def inodes(t, part):
         d = os.path.join(t.snapshot(), f"{partition_by}={part}")
@@ -830,7 +752,7 @@ def test_versioned_table_crash_points(spark, tmp_path, monkeypatch, mode):
                 if f.endswith(".parquet")}
 
     ref = table("ref")
-    ref.commit(spark.createDataFrame(rows, ddl), rewrites, batch_id="b1")
+    commit(ref)
     expected = content(ref)
     assert expected != content(table("base"))
 
@@ -847,25 +769,21 @@ def test_versioned_table_crash_points(spark, tmp_path, monkeypatch, mode):
 
     monkeypatch.setattr(ftm.os, "replace", dying_replace)
     with pytest.raises(OSError, match="simulated crash"):
-        t.commit(spark.createDataFrame(rows, ddl), rewrites, batch_id="b1")
+        commit(t)
     monkeypatch.setattr(ftm.os, "replace", real_replace)
     assert os.path.isdir(t.snapshot(2))  # the unpublished snapshot
     assert t.current_version() == 1 and t.versions() == [1]
     assert t.last_batch_id() == "b0"
     assert content(t) == before
 
-    assert t.commit(
-        spark.createDataFrame(rows, ddl), rewrites, batch_id="b1"
-    ) == 2
+    assert commit(t) == 2
     assert content(t) == expected
     assert t.last_batch_id() == "b1"
     for p in carried:
         assert inodes(t, p) == carried_inodes[p]
 
     # the ack was lost: the tagged retry writes nothing
-    assert t.commit(
-        spark.createDataFrame(rows, ddl), rewrites, batch_id="b1"
-    ) == 2
+    assert commit(t) == 2
     assert t.versions() == [1, 2]
     assert not os.path.exists(t.snapshot(3))
     assert content(t) == expected

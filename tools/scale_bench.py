@@ -621,108 +621,6 @@ def curve_zorder(spark, tmp, sizes):
     return out
 
 
-def curve_frontier_zorder_compact(spark, tmp, sizes):
-    """FrontierTable.compact(zorder=True) cost + real-footer due-scan
-    skipping, on the LIVE bucketed table (the r10 wiring of the r9
-    zorder operator): build a fragmented bucket-partitioned frontier
-    with a realistic due-date spread (14-day band + 2% never-due
-    sentinels), OPTIMIZE-ZORDER it, then read every output file's
-    parquet footer and count the files a quartile due scan
-    (next_fetch_date <= cutoff) skips — against the fragmented
-    baseline's ratio on the same data."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from incubator_stormcrawler_spark.streaming.frontier_table import (
-        FrontierTable,
-    )
-
-    cutoff_iso = "2024-01-11T00:00:00+00:00"
-
-    def skip_ratio(root):
-        from datetime import datetime
-
-        cutoff = datetime.fromisoformat(cutoff_iso)
-        pruned = total = 0
-        for f in glob.glob(f"{root}/bucket=*/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            if md.num_rows == 0:
-                continue
-            total += 1
-            names = [md.schema.column(i).name
-                     for i in range(md.num_columns)]
-            ci = names.index("next_fetch_date")
-            mn = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                mn = st.min if mn is None else min(mn, st.min)
-            if mn is not None and mn > cutoff:
-                pruned += 1
-        return (round(pruned / total, 2) if total else 0.0), total
-
-    out = []
-    for n in sizes:
-        tdir = os.path.join(tmp, f"fzc{n}")
-        hosts = max(n // 100, 100)
-        table = FrontierTable(tdir, partition_by="bucket")
-        frontier = spark.range(n).selectExpr(
-            f"concat('https://host', cast(mod(id, {hosts}) as string), "
-            "'.example/p', cast(id as string)) as url",
-            "'DISCOVERED' as status",
-            "case when mod(id, 100) >= 98 then timestamp '2200-01-01 00:00:00' "
-            "else timestampadd(MINUTE, cast(mod(id * 7, 20160) as int), "
-            "timestamp '2024-01-08 00:00:00') end as next_fetch_date",
-            "0 as error_count",
-            f"concat('host', cast(mod(id, {hosts}) as string), "
-            "'.example') as key",
-            "cast(mod(id, 10) as int) as bucket",
-        )
-        # 64-task commit: the accreted small-file state a crawl reaches
-        table.commit(frontier.repartition(64))
-        v = table.current_version()
-        base_ratio, base_files = skip_ratio(
-            os.path.join(tdir, f"v{v:06d}")
-        )
-        _clean(spark)
-        t0 = time.time()
-        table.compact(spark, zorder=True, zorder_files_per_bucket=16)
-        sec = time.time() - t0
-        z_ratio, z_files = skip_ratio(
-            os.path.join(tdir, f"v{table.current_version():06d}")
-        )
-        shutil.rmtree(tdir, ignore_errors=True)
-        out.append({
-            "rows": n, "sec": round(sec, 2), "rows_per_sec": int(n / sec),
-            "files_before": base_files, "files_after": z_files,
-            "skip_ratio_fragmented": base_ratio,
-            "skip_ratio_zordered": z_ratio,
-        })
-        print(f"   {out[-1]}", flush=True)
-    return out
-
-
-def frontier_zorder_compact_main():
-    """`--frontier-zorder-compact`: OPTIMIZE-ZORDER on the live bucketed
-    table — cost curve + real-footer due-scan skip ratios, merged as
-    frontier_zorder_compact."""
-    from incubator_stormcrawler_spark.session import get_spark
-
-    spark = get_spark("scale-bench-fzc")
-    spark.sparkContext.setLogLevel("ERROR")
-    tmp = tempfile.mkdtemp(prefix="scale_bench_fzc_")
-    try:
-        pts = curve_frontier_zorder_compact(
-            spark, tmp, [1_000_000, 4_000_000, 16_000_000]
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    entry = {"points": pts, "alpha": alpha(pts)}
-    print(f"## frontier_zorder_compact: alpha={entry['alpha']}", flush=True)
-    path = merge_scaling({"frontier_zorder_compact": entry})
-    print(f"merged frontier_zorder_compact into {path}")
-
-
 def curve_hilbert(spark, tmp, sizes):
     """hilbert_rewrite cost + head-to-head vs zorder_rewrite at every
     size: same one-range-shuffle rewrite shape, so the cost ratio should
@@ -1244,16 +1142,13 @@ def curve_resolved_map_write(spark, tmp, sizes):
 
 
 def curve_index_upsert(spark, tmp, sizes):
-    """IndexTable commit cost — the r13 LSM mode's 'Done' criterion:
-    a generation's index upsert tracks the BATCH, not the accumulated
-    index. For each index size N (docs) the log-structured table gets a
-    one-segment base, then the measured step upserts a FIXED 25k-doc
-    batch: an O(batch) segment append that never reads the store. The
-    A/B snapshot-mode upsert at each size is the r12 loop's cost —
-    read-the-index + anti-join + full rewrite, linear in N. The
-    read-side price of the log (newest-wins window over base + delta)
-    is probed alongside, bounded in the loop by the compact_every
-    cadence."""
+    """IndexTable commit cost: a generation's index upsert tracks the
+    BATCH, not the accumulated index. For each index size N (docs) the
+    segment log gets a one-segment base, then the measured step upserts
+    a FIXED 25k-doc batch: an O(batch) segment append that never reads
+    the store. The read-side price of the log (newest-wins window over
+    base + delta) is probed alongside, bounded in the loop by the
+    compact_every cadence."""
     from incubator_stormcrawler_spark.operators.indexing import IndexTable
 
     def synth_docs_sql(n, prefix):
@@ -1265,7 +1160,7 @@ def curve_index_upsert(spark, tmp, sizes):
 
     out = []
     for n in sizes:
-        log = IndexTable(f"{tmp}/log_{n}", log_structured=True)
+        log = IndexTable(f"{tmp}/log_{n}")
         log.upsert(synth_docs_sql(n, "base"))  # one-segment base
         batch = synth_docs_sql(25_000, "fresh").localCheckpoint(eager=True)
         _clean(spark)
@@ -1276,30 +1171,20 @@ def curve_index_upsert(spark, tmp, sizes):
         n_resolved = log.read(spark).count()
         sec_read = time.time() - t0
         assert n_resolved == n + 25_000, n_resolved
-        snap = IndexTable(f"{tmp}/snap_{n}")
-        snap.upsert(synth_docs_sql(n, "base"))
-        _clean(spark)
-        t0 = time.time()
-        snap.upsert(batch)
-        sec_snap = time.time() - t0
         out.append({
             "rows": n, "sec": round(sec, 2),
             "rows_per_sec": int(n / sec),
             "batch_docs": 25_000,
             "read_resolve_sec": round(sec_read, 2),
-            "snapshot_upsert_sec": round(sec_snap, 2),
         })
         print(f"   {out[-1]}", flush=True)
-        import shutil as _sh
-
-        _sh.rmtree(f"{tmp}/log_{n}", ignore_errors=True)
-        _sh.rmtree(f"{tmp}/snap_{n}", ignore_errors=True)
+        shutil.rmtree(f"{tmp}/log_{n}", ignore_errors=True)
     return out
 
 
 def index_upsert_main():
-    """`--index-upsert`: log-structured vs snapshot index commit cost
-    vs index size, merged as index_upsert."""
+    """`--index-upsert`: segment-log index commit cost vs index size,
+    merged as index_upsert."""
     import shutil
     import tempfile
 
@@ -1451,9 +1336,7 @@ def full_stack_crawl_main():
             warc_dir=os.path.join(tmp, "warcs"),
             # the 100 TB index mode: O(batch) segment appends, cadenced
             # compaction instead of a full rewrite per generation
-            index=IndexTable(
-                os.path.join(tmp, "index"), log_structured=True
-            ),
+            index=IndexTable(os.path.join(tmp, "index")),
             near_dedup=True,
             compact_every=3,
         )
@@ -2369,9 +2252,6 @@ def main():
         return
     if "--wmh" in sys.argv:
         weighted_minhash_main()
-        return
-    if "--frontier-zorder-compact" in sys.argv:
-        frontier_zorder_compact_main()
         return
     quick = "--quick" in sys.argv
     deep = "--deep" in sys.argv
